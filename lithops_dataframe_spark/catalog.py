@@ -5,7 +5,18 @@ lineitem events documents embeddings — one parquet each under an
 ``sf_dir`` such as ``/root/testdata/sf0.01``.
 
 Scale notes: parquet scans get column pruning + predicate pushdown from
-Catalyst for free; loaders never collect or cache eagerly. At 100 TB the
+Catalyst for free; loaders never collect or cache data eagerly.
+
+Schema cache: Spark infers a parquet file's schema with its own job on
+every ``spark.read.parquet``. ``load_table`` infers each table once and
+builds later readers with ``spark.read.schema(cached)``, so a warm load
+launches no job. Each call still returns a NEW relation (fresh attribute
+ids), so self-joins stay well-formed. The key is the absolute path, the
+file's ``st_mtime_ns`` and ``st_size`` (a file rewritten in place is
+re-inferred) and the session's schema-affecting parquet confs
+(``_SCHEMA_CONFS``). A path that is not a local regular file — a remote
+URI such as ``s3a://`` or a directory of part files, whose mtime misses
+in-place rewrites — is read without the cache. At 100 TB the
 same loaders point at partitioned parquet/object-store layouts — Spark's
 Hadoop FS connectors (s3a://, gs://, abfss://) replace the local paths
 transparently (reference analog: the IBM-COS object URL in
@@ -15,8 +26,10 @@ transparently (reference analog: the IBM-COS object URL in
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -38,8 +51,38 @@ TABLES = (
 BROADCAST_DIMS = ("region", "nation")
 
 
+# Session confs that change the schema Spark infers from a parquet file.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (abs path, st_mtime_ns, st_size, conf values) -> inferred schema. Two
+# foreachBatch threads racing on one key cost at most a duplicate inference.
+SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size, confs)
+    schema = SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    SCHEMA_CACHE[key] = df.schema
+    return df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -78,7 +121,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # conf) so ANY SparkSession — including the driver's, which doesn't use
         # our session builder — can read the table.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_events_ts(df)
     return df

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame
@@ -55,6 +56,21 @@ def _estimated_splits(df: DataFrame) -> int | None:
 # (verified: struct.pack equality against the createDataFrame path).
 
 
+def double_sql(x: float) -> str:
+    """A DOUBLE literal: repr() + the D suffix for finite values; NaN and
+    ±Inf have no literal syntax and render as a string cast."""
+    if math.isfinite(x):
+        return repr(x) + "D"
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote an identifier (any string, reserved words too)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sql_scalar_literal(v) -> str:
     """Render a Python scalar as a Spark SQL literal (None/bool/int/
     float/str). Floats get the D suffix — an undecorated 0.1 parses as
@@ -66,7 +82,7 @@ def sql_scalar_literal(v) -> str:
     if isinstance(v, int):
         return f"{v}L"
     if isinstance(v, float):
-        return repr(v) + "D"
+        return double_sql(v)
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (bytes, bytearray)):
@@ -76,7 +92,7 @@ def sql_scalar_literal(v) -> str:
 
 def doubles_sql(vals) -> str:
     """array(x1D, x2D, ...) — a double-array literal."""
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
+    return "array(" + ",".join(double_sql(float(v)) for v in vals) + ")"
 
 
 def matrix_sql(mat) -> str:
@@ -87,7 +103,7 @@ def matrix_sql(mat) -> str:
 def one_row_frame(spark, **named_sql: str) -> DataFrame:
     """One-row DataFrame of SQL literal expressions over OneRowRelation
     (``SELECT <expr> AS <name>``): zero tasks per materialization."""
-    cols = ", ".join(f"{sql} AS {name}" for name, sql in named_sql.items())
+    cols = ", ".join(f"{sql} AS {quote_ident(name)}" for name, sql in named_sql.items())
     return spark.sql(f"SELECT {cols}")
 
 
@@ -95,7 +111,12 @@ def values_frame(spark, rows, schema) -> DataFrame:
     """Small literal DataFrame via ``VALUES`` (LocalRelation) with every
     column cast to the DDL ``schema`` types — the zero-task drop-in for
     ``spark.createDataFrame(rows, schema)`` on driver-computed results
-    (bounded: literal SQL text; keep it to ≲ thousands of rows)."""
+    (bounded: literal SQL text; keep it to ≲ thousands of rows).
+
+    Python ints render as BIGINT literals, so every int must lie in
+    [-2**63, 2**63 - 1]. Top-level field names are backtick-quoted and
+    may be any string, reserved words included; nested struct field names
+    go through ``simpleString()`` unquoted and must be plain identifiers."""
     from pyspark.sql.types import _parse_datatype_string
 
     sch = schema if not isinstance(schema, str) else _parse_datatype_string(schema)
@@ -105,7 +126,7 @@ def values_frame(spark, rows, schema) -> DataFrame:
         "(" + ",".join(sql_scalar_literal(v) for v in row) + ")" for row in rows
     )
     casts = ", ".join(
-        f"CAST(c{i} AS {f.dataType.simpleString()}) AS {f.name}"
+        f"CAST(c{i} AS {f.dataType.simpleString()}) AS {quote_ident(f.name)}"
         for i, f in enumerate(sch.fields)
     )
     anon = ", ".join(f"c{i}" for i in range(len(sch.fields)))
