@@ -420,17 +420,6 @@ def _encode_block(bw, block, q, dc_codes, ac_codes, pred):
     return int(zz[0])
 
 
-def _blocks(plane: np.ndarray):
-    """Pad to multiples of 8 by edge replication and yield 8x8 blocks in
-    raster order."""
-    h, w = plane.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge").astype(np.float64)
-    for y in range(0, ph, 8):
-        for x in range(0, pw, 8):
-            yield padded[y : y + 8, x : x + 8]
-
-
 def encode_jpeg(arr: np.ndarray, *, subsample: bool = False, restart_interval: int = 0) -> bytes:
     """Encode gray ``(h, w)`` or RGB ``(h, w, 3)`` uint8 as baseline JPEG.
 

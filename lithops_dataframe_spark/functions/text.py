@@ -89,23 +89,6 @@ def stopword_hits_sql(tokens_expr: str, words: list[str]) -> str:
     )
 
 
-def punct_chars(text: Column) -> Column:
-    """Count of non-alphanumeric, non-space characters."""
-    return F.length(F.regexp_replace(text, r"[A-Za-z0-9\s]", ""))
-
-
-def punct_chars_sql(expr: str) -> str:
-    return f"length(regexp_replace({expr}, '[A-Za-z0-9\\s]', '', 'g'))"
-
-
-def digit_chars(text: Column) -> Column:
-    return F.length(F.regexp_replace(text, r"[^0-9]", ""))
-
-
-def digit_chars_sql(expr: str) -> str:
-    return f"length(regexp_replace({expr}, '[^0-9]', '', 'g'))"
-
-
 def alpha_chars(text: Column) -> Column:
     return F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
 
@@ -150,24 +133,6 @@ def language_id_sql(tokens_expr: str) -> str:
 # ---------------------------------------------------------------------------
 # quality scoring
 # ---------------------------------------------------------------------------
-def quality_features(text: Column) -> dict[str, Column]:
-    """Ratio features in float64; n_chars>0 assumed (guard with nullif)."""
-    toks = ws_tokens(text)
-    n_chars = F.length(text).cast("double")
-    n_toks = F.size(toks).cast("double")
-    all_stop = sorted({w for ws in STOPWORDS.values() for w in ws})
-    return {
-        "n_chars": F.length(text).cast("long"),
-        "n_tokens": F.size(toks).cast("long"),
-        "mean_token_len": F.round((n_chars - (n_toks - 1)) / n_toks, 6),
-        "uniq_ratio": F.round(F.size(F.array_distinct(toks)) / n_toks, 6),
-        "stop_ratio": F.round(stopword_hits(toks, all_stop) / n_toks, 6),
-        "punct_ratio": F.round(punct_chars(text) / n_chars, 6),
-        "digit_ratio": F.round(digit_chars(text) / n_chars, 6),
-        "alpha_ratio": F.round(alpha_chars(text) / n_chars, 6),
-    }
-
-
 def quality_score(text: Column) -> Column:
     """Fixed-weight composite in [0, ~1]: rewards density of real words."""
     toks = ws_tokens(text)

@@ -8,14 +8,28 @@ Five dedup families, all Spark-first and shuffle-conscious:
   bucketing → equi-join on band key → exact-Jaccard verification of the
   candidates. The band join replaces the quadratic all-pairs comparison
   with hash-partitioned buckets; verification touches only candidates.
-- **SimHash**: 32-bit fingerprints, LSH on 8-bit blocks (any pair within
+- **SimHash**: 60-bit fingerprints, LSH on 15-bit blocks (any pair within
   Hamming distance d must agree on ≥1 of d+1 blocks), XOR+popcount verify.
-- **exact n-gram Jaccard**: inverted-index join (explode shingles → join on
-  shingle → count per pair) — exact, and linear in total postings rather
-  than quadratic in documents; prune high-frequency shingles like any
-  inverted index would.
+- **exact n-gram Jaccard / containment**: the full inverted-index join
+  (explode shingles → join on shingle → count per pair) as the reference,
+  and AllPairs prefix filtering as the scale path.
 - **embedding cosine near-dup** lives in
   :mod:`lithops_dataframe_spark.operators.similarity`.
+
+The set-similarity pair miners (MinHash pairs, incremental MinHash dedup —
+batch and streaming — prefix-filtered Jaccard and containment) share ONE
+candidate → verify core:
+
+- candidates: :func:`band_postings` (LSH band postings) or
+  :func:`_prefix_postings` (AllPairs prefixes) over the persisted
+  :func:`_shingled` / minhash base;
+- candidate dedup: :func:`_dedup_pinned`, their single candidate-dedup
+  policy;
+- verification: :func:`_with_common` rejoins the shingle sets and adds
+  their overlap; :func:`_jaccard` is the one Jaccard expression;
+- incremental decisions: :func:`incremental_decisions`, called by
+  :func:`minhash_incremental_dedup` and by the streaming per-epoch step
+  (:mod:`lithops_dataframe_spark.streaming.dedup`).
 
 All hashing comes from :mod:`lithops_dataframe_spark.functions.hashing`, so
 every operator here has a bit-identical DuckDB oracle (see plans/dedup_q.py).
@@ -77,6 +91,90 @@ def with_minhash(
     )
 
 
+def band_postings(base: DataFrame, bands: int, *carry: str) -> DataFrame:
+    """Slim LSH postings (id, *carry, band_idx, band_key): one row per band
+    of ``base``'s ``__sig`` signature. Band joins shuffle only these
+    columns, never the shingle arrays; shingles rejoin after candidate
+    dedup (:func:`_with_common`), so payload movement is O(candidates),
+    not O(docs × bands)."""
+    return base.select(
+        "id", *carry, F.explode(H.band_signatures(F.col("__sig"), bands)).alias("band")
+    ).select("id", *carry, F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key"))
+
+
+def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """Persisted (id, sh) word n-gram shingle sets. The arrays feed the
+    candidate generation and both sides of the verification rejoin, so
+    they are computed once."""
+    return cache.persist_tracked(
+        ensure_parallelism(df.select(id_col, text_col)).select(
+            F.col(id_col).alias("id"), H.word_shingles(F.col(text_col), n).alias("sh")
+        )
+    )
+
+
+def _prefix_postings(base: DataFrame, num: int, den: int) -> tuple[DataFrame, DataFrame]:
+    """AllPairs prefix construction over (id, sh) for threshold num/den.
+
+    Returns (postings, prefix), both (id, n, s): every shingle of every
+    document, and each document's prefix — its first ``n − ⌈t·n⌉ + 1``
+    shingles in the global (document-frequency ASC, shingle) order, rarest
+    first. Two sets with overlap ≥ ⌈t·n⌉ share a token inside the prefix,
+    so a join on prefix tokens loses no true pair. Integer-exact:
+    ⌈num·n/den⌉ = (num·n + den − 1) div den."""
+    from pyspark.sql.window import Window
+
+    postings = base.select("id", F.size("sh").cast("long").alias("n"), F.explode("sh").alias("s"))
+    dfreq = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    ceil_tn = (F.lit(num) * F.col("n") + F.lit(den - 1)) / F.lit(den)
+    prefix_len = F.col("n") - F.floor(ceil_tn) + F.lit(1)
+    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("s").asc())
+    prefix = (
+        postings.join(dfreq, "s")
+        .withColumn("pos", F.row_number().over(w))
+        .filter(F.col("pos") <= prefix_len)
+        .select("id", "n", "s")
+    )
+    return postings, prefix
+
+
+def _with_common(cand: DataFrame, shingles: DataFrame, a: str, b: str) -> DataFrame:
+    """Verification input: rejoin the (id, sh) shingle sets onto candidate
+    pairs keyed by columns ``a`` and ``b`` as ``sh_a``/``sh_b`` and add
+    their overlap ``common`` (JVM-side ``array_intersect``, candidates
+    only)."""
+    return (
+        cand.join(shingles.select(F.col("id").alias(a), F.col("sh").alias("sh_a")), a)
+        .join(shingles.select(F.col("id").alias(b), F.col("sh").alias("sh_b")), b)
+        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
+    )
+
+
+def _jaccard():
+    """``common / (|a| + |b| − common)`` over :func:`_with_common` columns:
+    the exact Jaccard of two distinct-element sets (``word_shingles`` is
+    ``array_distinct``), the same double as |a ∩ b| / |a ∪ b|."""
+    return F.col("common") / (F.size("sh_a") + F.size("sh_b") - F.col("common"))
+
+
+def _dedup_pinned(df: DataFrame, spark_session, *keys: str) -> DataFrame:
+    """The candidate-dedup policy of every set-similarity pair miner, the
+    streaming incremental step included: distinct candidate pairs pinned at
+    full parallelism with ONE exchange. Verification is CPU-bound
+    (``array_intersect`` over full shingle arrays) on a byte-small
+    candidate set, so AQE would coalesce it onto a handful of tasks; the
+    explicit ``repartition(N, keys)`` pins it (measured at sf0.1 on the
+    prefix join: 4.5 s → 3.0 s). The repartition runs FIRST: its hash
+    partitioning already satisfies dropDuplicates' clustering
+    requirement, so dedup runs in place (r13, guide §2.4); the r12 order
+    (dedup exchange, then repartition on the same keys) paid a second
+    exchange. Interleaved A/B at sf0.1: pre-dedup repartition median
+    0.489 s vs the r12 order 0.508 s on minhash pairs
+    (plans/r13/ab_records.jsonl)."""
+    n = spark_session.sparkContext.defaultParallelism
+    return df.repartition(n, *keys).dropDuplicates(list(keys))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -85,7 +183,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 2,
     bands: int = 4,
     threshold: float = 0.6,
-    reuse_signatures: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH with exact-Jaccard verification.
 
@@ -93,7 +190,7 @@ def minhash_lsh_pairs(
 
     Plan shape (scales to 100 TB):
       1. narrow map: shingles + signature + band keys per doc;
-      2. explode to (band_idx, band_key, id, shingles) postings;
+      2. explode to (band_idx, band_key, id) postings;
       3. self equi-join on (band_idx, band_key) — hash shuffle on band key,
          which is uniform by construction (md5), so no skew;
       4. distinct candidate pairs (a < b);
@@ -103,32 +200,14 @@ def minhash_lsh_pairs(
     j≥0.9, ≈0.22 at j=0.5, ≈0.03 at j=0.3 — tuned for the high-similarity
     dedup regime; raise `bands` for lower thresholds.
     """
-    base = with_minhash(
-        ensure_parallelism(df.select(id_col, text_col)), text_col, shingle_n=shingle_n
-    ).select(F.col(id_col).alias("id"), "__shingles", "__sig")
-    if reuse_signatures:
-        # base feeds three lineages (both join sides + verification);
-        # persisting computes shingles+signatures once instead of 3×.
-        # MEMORY_AND_DISK spills at corpus scale; callers running many
-        # queries in one session may pass reuse_signatures=False or
-        # unpersist via base's storage (bounded here: per-process bench/
-        # driver sessions).
-        from pyspark import StorageLevel
-
-        base = cache.track(base.persist(StorageLevel.MEMORY_AND_DISK))
+    # persisted: base feeds three lineages (both join sides +
+    # verification), so shingles + signatures are computed once
+    base = cache.persist_tracked(
+        with_minhash(
+            ensure_parallelism(df.select(id_col, text_col)), text_col, shingle_n=shingle_n
+        ).select(F.col(id_col).alias("id"), "__shingles", "__sig")
+    )
     return minhash_pairs_from_base(base, bands=bands, threshold=threshold)
-
-
-def _dedup_pinned(df: DataFrame, spark_session, *keys: str) -> DataFrame:
-    """Distinct candidate pairs pinned at full parallelism with ONE
-    exchange: ``repartition(N, keys)`` FIRST — the hash partitioning
-    already satisfies dropDuplicates' clustering requirement, so dedup
-    runs in place (r13, guide §2.4); the r12 order (dedup exchange, then
-    repartition on the same keys) paid a second exchange. Interleaved
-    A/B at sf0.1: pre-dedup repartition median 0.489 s vs the r12 order
-    0.508 s on minhash pairs (plans/r13/ab_records.jsonl)."""
-    n = spark_session.sparkContext.defaultParallelism
-    return df.repartition(n, *keys).dropDuplicates(list(keys))
 
 
 def minhash_pairs_from_base(
@@ -143,14 +222,7 @@ def minhash_pairs_from_base(
     like the corpus-cleaning pipeline reuse one persisted frame that also
     carries their own downstream columns, so the corpus is scanned and
     shingled exactly once per run."""
-    # Slim postings: the band self-join shuffles only (id, band_idx,
-    # band_key) — never the shingle arrays. Shingles rejoin AFTER candidate
-    # dedup, so payload movement is O(candidates), not O(docs × bands).
-    posted = base.select(
-        "id",
-        F.explode(H.band_signatures(F.col("__sig"), bands)).alias("band"),
-    ).select("id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key"))
-
+    posted = band_postings(base, bands)
     a, b = posted.alias("a"), posted.alias("b")
     cand = (
         a.join(
@@ -160,25 +232,66 @@ def minhash_pairs_from_base(
             & (F.col("a.id") < F.col("b.id")),
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        # ONE exchange for dedup + verify-parallelism (r13, guide §2.4):
-        # the explicit hash repartition on (id_a, id_b) pins the CPU-bound
-        # verify stage at full parallelism (AQE coalesces by bytes, not
-        # CPU) AND already satisfies dropDuplicates' clustering — the r12
-        # order (dedup shuffle, then repartition on the same keys) paid a
-        # second exchange for nothing.
         .transform(_dedup_pinned, base.sparkSession, "id_a", "id_b")
     )
-    sh = base.select("id", "__shingles")
-    cand = (
-        cand.join(sh.select(F.col("id").alias("id_a"), F.col("__shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("__shingles").alias("sh_b")), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    shingles = base.select("id", F.col("__shingles").alias("sh"))
     return (
-        cand.withColumn("jaccard", inter / union)
+        _with_common(cand, shingles, "id_a", "id_b")
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+    )
+
+
+def incremental_decisions(
+    new: DataFrame,
+    others: DataFrame,
+    shingles: DataFrame,
+    *,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """Probe → verify → decide for a batch of arriving documents.
+
+    ``new`` holds the arriving docs (id, __sig); ``others`` is the
+    postings frame (id, band_idx, band_key, require_lt) of every doc that
+    can drop one of them — ``require_lt`` marks batch-mates, which count
+    only when their id is smaller (deterministic first-wins inside the
+    batch); ``shingles`` is (id, sh) for the union of both. Returns one
+    row per arriving doc: (id, n, keep), n = verified near-dup matches
+    (Jaccard ≥ threshold), keep = 1 iff n = 0.
+
+    Candidate work is new-postings × others on (band_idx, band_key) —
+    O(batch) probe work against the index, never existing × existing.
+    Both :func:`minhash_incremental_dedup` and the streaming per-epoch
+    step are this function; only their input wiring and output column
+    names differ."""
+    a, b = band_postings(new, bands).alias("a"), others.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.id") != F.col("b.id"))
+            & (~F.col("b.require_lt") | (F.col("b.id") < F.col("a.id"))),
+        )
+        .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("other_id"))
+        .transform(_dedup_pinned, new.sparkSession, "new_id", "other_id")
+    )
+    n_dup = (
+        _with_common(cand, shingles, "new_id", "other_id")
+        .filter(_jaccard() >= threshold)
+        .groupBy("new_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return (
+        new.select("id")
+        .join(n_dup, F.col("id") == F.col("new_id"), "left")
+        .select(
+            "id",
+            F.coalesce(F.col("n"), F.lit(0).cast("long")).alias("n"),
+            F.col("new_id").isNull().cast("int").alias("keep"),
+        )
     )
 
 
@@ -202,73 +315,28 @@ def minhash_incremental_dedup(
     Plan shape at 100 TB: postings for the full corpus are the standing
     LSH index (in production they persist between batches; here they are
     computed in the same job); the candidate join is new-postings ×
-    all-postings on (band_idx, band_key) — O(batch) probe work against
-    the index, never existing × existing. Jaccard verification touches
-    threatening candidates only, and the per-doc decision is a left
-    anti-ish aggregate over matches.
+    all-postings on (band_idx, band_key) — see
+    :func:`incremental_decisions`, shared with the streaming step.
     """
-    base = with_minhash(
-        ensure_parallelism(df.select(id_col, text_col, new_col)),
-        text_col,
-        shingle_n=shingle_n,
-    ).select(
-        F.col(id_col).alias("id"),
-        F.col(new_col).cast("boolean").alias("is_new"),
-        "__shingles",
-        "__sig",
-    )
-    from pyspark import StorageLevel
-
-    base = cache.track(base.persist(StorageLevel.MEMORY_AND_DISK))
-    posted = base.select(
-        "id",
-        "is_new",
-        F.explode(H.band_signatures(F.col("__sig"), bands)).alias("band"),
-    ).select(
-        "id",
-        "is_new",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
-    )
-    a = posted.filter(F.col("is_new")).alias("a")  # the arriving batch probes
-    b = posted.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") != F.col("b.id"))
-            # only pairs that can DROP the arriving doc: an existing doc,
-            # or an earlier (smaller-id) doc of the same batch
-            & (~F.col("b.is_new") | (F.col("b.id") < F.col("a.id"))),
-        )
-        .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("other_id"))
-        .dropDuplicates(["new_id", "other_id"])
-    )
-    sh = base.select("id", "__shingles")
-    cand = cand.join(
-        sh.select(F.col("id").alias("new_id"), F.col("__shingles").alias("sh_a")),
-        "new_id",
-    ).join(
-        sh.select(F.col("id").alias("other_id"), F.col("__shingles").alias("sh_b")),
-        "other_id",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    matches = cand.filter(inter / union >= threshold).select("new_id", "other_id")
-    n_dup = matches.groupBy("new_id").agg(F.count(F.lit(1)).alias("n_dup_matches"))
-    return (
-        base.filter(F.col("is_new"))
-        .select(F.col("id"))
-        .join(n_dup, F.col("id") == F.col("new_id"), "left")
-        .select(
-            "id",
-            F.coalesce(F.col("n_dup_matches"), F.lit(0).cast("long")).alias(
-                "n_dup_matches"
-            ),
-            (F.col("n_dup_matches").isNull()).cast("int").alias("keep"),
+    base = cache.persist_tracked(
+        with_minhash(
+            ensure_parallelism(df.select(id_col, text_col, new_col)),
+            text_col,
+            shingle_n=shingle_n,
+        ).select(
+            F.col(id_col).alias("id"),
+            F.col(new_col).cast("boolean").alias("require_lt"),
+            "__shingles",
+            "__sig",
         )
     )
+    return incremental_decisions(
+        base.filter(F.col("require_lt")),
+        band_postings(base, bands, "require_lt"),
+        base.select("id", F.col("__shingles").alias("sh")),
+        bands=bands,
+        threshold=threshold,
+    ).withColumnRenamed("n", "n_dup_matches")
 
 
 def levenshtein_blocked_pairs(
@@ -457,14 +525,13 @@ def simhash_pairs(
     with Hamming distance ≤ 3 agrees exactly on ≥ 1 block (pigeonhole), so
     the 4-way block join has perfect recall for d ≤ 3; XOR+popcount verifies.
     """
-    from pyspark import StorageLevel
-
-    base = with_simhash(ensure_parallelism(df.select(id_col, text_col)), text_col).select(
-        F.col(id_col).alias("id"), F.col("__simhash").alias("sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cache.track(base)
     # persisted: the 60-bit fingerprint (60 per-bit votes over the token
     # hashes) feeds both sides of the block self-join — compute it once.
+    base = cache.persist_tracked(
+        with_simhash(ensure_parallelism(df.select(id_col, text_col)), text_col).select(
+            F.col(id_col).alias("id"), F.col("__simhash").alias("sh")
+        )
+    )
     blocks = base.select(
         "id",
         "sh",
@@ -507,31 +574,20 @@ def ngram_jaccard_pairs(
     *,
     shingle_n: int = 2,
     threshold: float = 0.3,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """EXACT n-gram Jaccard similarity join via inverted index.
+    """EXACT n-gram Jaccard similarity join via the full inverted index.
 
     explode(shingles) → self-join on shingle → count common shingles per
     pair → jaccard = common / (|A| + |B| - common). Work is Σ df(s)² over
-    shingle document-frequencies, not |docs|²; `max_shingle_freq` drops
-    stop-shingles (df > cap) exactly like an inverted-index stop list —
-    essential at scale, optional here.
+    shingle document-frequencies, not |docs|²; the prefix-filtered
+    :func:`jaccard_prefix_filter_pairs` computes the same pairs from the
+    rare-shingle slice only, and this operator is its reference.
     """
-    from pyspark import StorageLevel
-
-    base = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"), H.word_shingles(F.col(text_col), shingle_n).alias("sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cache.track(base)
     # persisted: shingle arrays feed four lineages (both join sides of the
     # postings self-join + both size joins)
+    base = _shingled(df, text_col, id_col, shingle_n)
     sizes = base.select("id", F.size("sh").alias("n_sh"))
     postings = base.select("id", F.explode("sh").alias("shingle"))
-    if max_shingle_freq is not None:
-        freq = postings.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        postings = postings.join(freq.filter(F.col("df") <= max_shingle_freq), "shingle", "inner").select(
-            "id", "shingle"
-        )
 
     pa, pb = postings.alias("pa"), postings.alias("pb")
     common = (
@@ -588,38 +644,18 @@ def jaccard_prefix_filter_pairs(
     """
     from fractions import Fraction
 
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
     frac = Fraction(str(threshold))
     num, den = frac.numerator, frac.denominator
 
-    base = (
-        ensure_parallelism(df.select(id_col, text_col))
-        .select(F.col(id_col).alias("id"), H.word_shingles(F.col(text_col), shingle_n).alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cache.track(base)
-    # persisted: shingle arrays feed the postings lineage and both sides
-    # of the verification join
-    postings = base.select("id", F.size("sh").cast("long").alias("n"), F.explode("sh").alias("s"))
-    dfreq = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    # prefix_len = n − ⌈t·n⌉ + 1, integer-exact: ⌈num·n/den⌉ = (num·n + den − 1) div den
-    ceil_tn = (F.lit(num) * F.col("n") + F.lit(den - 1)) / F.lit(den)
-    prefix_len = F.col("n") - F.floor(ceil_tn) + F.lit(1)
-    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("s").asc())
+    base = _shingled(df, text_col, id_col, shingle_n)
+    _, prefix = _prefix_postings(base, num, den)
     # persisted: the prefix postings feed BOTH sides of the candidate
     # self-join; without it the postings⋈dfreq join + rank window execute
     # twice (the static plan carried two full copies of the subtree —
     # r12, guide §5 reuse rule). Re-adjudicated r13 (VERDICT r12 item 2):
     # interleaved A/B persist median 3.16 s vs recompute 3.26 s at sf0.1
     # (plans/r13/ab_records.jsonl) — persist stays.
-    prefix = cache.persist_tracked(
-        postings.join(dfreq, "s")
-        .withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= prefix_len)
-        .select("id", "n", "s")
-    )
+    prefix = cache.persist_tracked(prefix)
 
     pa, pb = prefix.alias("pa"), prefix.alias("pb")
     cand = (
@@ -632,26 +668,11 @@ def jaccard_prefix_filter_pairs(
             & (F.lit(den) * F.col("pa.n") >= F.lit(num) * F.col("pb.n")),
         )
         .select(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
-        # verification is CPU-bound (array_intersect over full shingle
-        # arrays) on a BYTE-small candidate set, so AQE coalesces it onto
-        # a handful of tasks and serializes the expensive part; an
-        # explicit repartition pins the verify stage at full parallelism
-        # (measured at sf0.1: 4.5 s → 3.0 s). _dedup_pinned folds the
-        # dedup + pinning into ONE exchange (r13, guide §2.4).
         .transform(_dedup_pinned, df.sparkSession, "id_a", "id_b")
     )
-
-    arr_a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    arr_b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     return (
-        cand.join(arr_a, "id_a")
-        .join(arr_b, "id_b")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.size("sh_a") + F.size("sh_b") - F.col("common")),
-        )
+        _with_common(cand, base, "id_a", "id_b")
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
@@ -686,32 +707,11 @@ def containment_pairs(
     """
     from fractions import Fraction
 
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
     frac = Fraction(str(threshold))
     num, den = frac.numerator, frac.denominator
 
-    base = (
-        ensure_parallelism(df.select(id_col, text_col))
-        .select(F.col(id_col).alias("id"), H.word_shingles(F.col(text_col), shingle_n).alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cache.track(base)
-    # persisted: shingle arrays feed the postings lineage (both join
-    # sides) and the verification join
-    postings = base.select("id", F.size("sh").cast("long").alias("n"), F.explode("sh").alias("s"))
-    dfreq = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    ceil_tn = (F.lit(num) * F.col("n") + F.lit(den - 1)) / F.lit(den)
-    prefix_len = F.col("n") - F.floor(ceil_tn) + F.lit(1)
-    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("s").asc())
-    prefix = (
-        postings.join(dfreq, "s")
-        .withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= prefix_len)
-        .select("id", "n", "s")
-    )
-
+    base = _shingled(df, text_col, id_col, shingle_n)
+    postings, prefix = _prefix_postings(base, num, den)
     pa, pb = prefix.alias("pa"), postings.alias("pb")
     cand = (
         pa.join(
@@ -723,20 +723,10 @@ def containment_pairs(
             ),
         )
         .select(F.col("pa.id").alias("id_small"), F.col("pb.id").alias("id_big"))
-        # same AQE trap as jaccard_prefix_filter_pairs: the candidate set
-        # is byte-small but array_intersect verification is CPU-bound —
-        # pin the verify stage at full parallelism; _dedup_pinned folds
-        # dedup + pinning into ONE exchange (r13, guide §2.4).
         .transform(_dedup_pinned, df.sparkSession, "id_small", "id_big")
     )
-
-    arr_a = base.select(F.col("id").alias("id_small"), F.col("sh").alias("sh_a"))
-    arr_b = base.select(F.col("id").alias("id_big"), F.col("sh").alias("sh_b"))
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     return (
-        cand.join(arr_a, "id_small")
-        .join(arr_b, "id_big")
-        .withColumn("common", common)
+        _with_common(cand, base, "id_small", "id_big")
         .filter(F.lit(den) * F.col("common") >= F.lit(num) * F.size("sh_a").cast("long"))
         .select(
             "id_small",

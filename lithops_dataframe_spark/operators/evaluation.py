@@ -209,6 +209,11 @@ def roc_auc_by_group(
     )
 
 
+#: Input size from which :func:`ks_two_sample_by_group` persists its
+#: distinct aggregate before the range shuffle (see the note there).
+_KS_PERSIST_MIN_BYTES = 256 * 1024 * 1024
+
+
 def ks_two_sample_by_group(
     df: DataFrame, group_col: str, value_col: str, flag_col: str
 ) -> DataFrame:
@@ -256,17 +261,14 @@ def ks_two_sample_by_group(
     # scan it saves is big enough to dominate; unknown input size (non-
     # file lineage) → persist, since such lineages are derived frames
     # whose recompute is the expensive case.
-    import os as _os
-
     from lithops_dataframe_spark.operators.util import estimated_input_bytes
 
     g = df.groupBy(group_col, value_col).agg(
         F.sum(a).alias("ca"),
         F.sum(F.lit(1) - a).alias("cb"),
     )
-    min_bytes = int(_os.environ.get("LDS_KS_PERSIST_MIN_BYTES", str(256 * 1024 * 1024)))
     in_bytes = estimated_input_bytes(df)
-    if in_bytes is None or in_bytes >= min_bytes:
+    if in_bytes is None or in_bytes >= _KS_PERSIST_MIN_BYTES:
         g = cache.persist_tracked(g)
     # part feeds the local prefix window AND the per-(pid, group) totals;
     # the tracked persist stops the range shuffle from running twice AND

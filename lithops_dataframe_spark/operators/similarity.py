@@ -112,13 +112,36 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Guarded cosine of ``a`` and ``b`` given their norms: NULL when either
+    vector has zero norm (undefined similarity), matching DuckDB's x/0.0 →
+    NULL instead of crashing under ANSI (r9 edge sweep). A NULL sim ranks
+    last on both engines (Spark DESC and DuckDB both order NULLS LAST) and
+    fails any threshold predicate. Operators bind the norms once per row,
+    so each pair costs ONE fold — the same doubles as the inline form."""
+    return F.when(na * nb > 0, dot(a, b) / (na * nb))
+
+
 def cosine(a: Column, b: Column) -> Column:
-    """Guarded cosine: NULL when either vector has zero norm (undefined
-    similarity), matching DuckDB's x/0.0 → NULL instead of crashing under
-    ANSI (r9 edge sweep). Catalyst's subexpression elimination shares the
-    norm folds between the guard and the division."""
-    prod = norm(a) * norm(b)
-    return F.when(prod > 0, dot(a, b) / prod)
+    """Guarded cosine with inline norms (see :func:`cosine_from_norms`).
+    Catalyst's subexpression elimination shares the norm folds between
+    the guard and the division."""
+    return cosine_from_norms(a, b, norm(a), norm(b))
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Shared top-k tail: score (query_id, neighbor_id, q_emb, c_emb,
+    q_nrm, c_nrm) candidates with :func:`cosine_from_norms`, rank per query
+    by sim DESC, neighbor_id ASC, keep ranks ≤ k, and emit
+    (query_id, neighbor_id, rank, sim rounded to 6)."""
+    sim = cosine_from_norms(F.col("q_emb"), F.col("c_emb"), F.col("q_nrm"), F.col("c_nrm"))
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return (
+        cand.withColumn("sim", sim)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), F.round("sim", 6).alias("sim"))
+    )
 
 
 def with_unit(df: DataFrame, emb_col: str, out_col: str = "unit") -> DataFrame:
@@ -142,42 +165,6 @@ def with_unit(df: DataFrame, emb_col: str, out_col: str = "unit") -> DataFrame:
         )
         .drop("__norm")
     )
-
-
-def plane_dot(a: Column, plane: list[float]) -> Column:
-    """Dot of an embedding column with a literal hyperplane."""
-    arr = F.array(*[F.lit(v) for v in plane])
-    return dot(a, arr)
-
-
-def bucket_key(a: Column, table: int) -> Column:
-    """Sign-bit bucket key of embedding `a` in hash table `table`.
-
-    Bit p is set iff dot(a, plane_p) > 0; key ∈ [0, 2^N_PLANES).
-    """
-    key = F.lit(0)
-    for p in range(N_PLANES):
-        key = key + F.when(plane_dot(a, HYPERPLANES[table][p]) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return key.cast("int")
-
-
-def all_plane_dots(a: Column) -> Column:
-    """All N_TABLES×N_PLANES hyperplane dots in ONE pass.
-
-    A single ``transform`` over a literal array-of-planes keeps the
-    expression tree one lambda deep — the naive per-plane formulation
-    duplicates the fold lambda 32×, which costs seconds of driver-side
-    analysis per query (constant, but pure overhead). Dot i is for
-    table i // N_PLANES, plane i % N_PLANES.
-    """
-    planes = F.array(
-        *[
-            F.array(*[F.lit(v) for v in HYPERPLANES[t][p]])
-            for t in range(N_TABLES)
-            for p in range(N_PLANES)
-        ]
-    )
-    return F.transform(planes, lambda plane: dot(a, plane))
 
 
 def with_buckets(df: DataFrame, emb_col: str) -> DataFrame:
@@ -268,29 +255,9 @@ def brute_force_topk(
         F.col(emb_col).alias("c_emb"),
         norm(F.col(emb_col)).alias("c_nrm"),
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            # zero-norm vector (e.g. an all-zero Matryoshka prefix of a
-            # vector supported only on later dims): cosine is undefined →
-            # NULL, ranked last on both engines. DuckDB's x/0.0 already
-            # yields NULL; unguarded Spark throws ANSI DIVIDE_BY_ZERO
-            # (edge-fixture r8).
-            "sim",
-            F.when(
-                F.col("q_nrm") * F.col("c_nrm") > 0,
-                dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_nrm") * F.col("c_nrm")),
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), F.round("sim", 6).alias("sim"))
-    )
+    # a zero-norm vector (e.g. an all-zero Matryoshka prefix of a vector
+    # supported only on later dims) scores NULL (edge-fixture r8)
+    return _top_k(c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 def ann_topk(
@@ -381,21 +348,7 @@ def ann_topk(
         .join(c, "neighbor_id")
         .join(F.broadcast(q), "query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn(
-            "sim",
-            # zero-norm guard: NULL sim, ranked last on both engines
-            # (Spark desc and DuckDB both order NULLS LAST) — r9 edge sweep
-            F.when(
-                F.col("q_nrm") * F.col("c_nrm") > 0,
-                dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
-            ),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), F.round("sim", 6).alias("sim"))
-    )
+    return _top_k(cand, k)
 
 
 def ivf_topk(
@@ -529,23 +482,11 @@ def ivf_topk(
     cand = c_assigned.join(F.broadcast(q_assigned), "cell_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    # one fold per candidate (norms carried from assignment; bit-identical
-    # to the inline cosine — same doubles, same multiplication order);
-    # zero-norm guard: NULL sim, ranked last on both engines.
+    # one fold per candidate (norms carried from assignment).
     # Interleaved A/B vs the r12 shape (unhinted join + dropDuplicates +
     # 3-fold cosine): median 1.068 vs 1.072 s at sf0.1 — flat locally,
     # strictly better shaped at scale (plans/r13/ab_records.jsonl).
-    sim = F.when(
-        F.col("q_nrm") * F.col("c_nrm") > 0,
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_nrm") * F.col("c_nrm")),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), F.round("sim", 6).alias("sim"))
-    )
+    return _top_k(cand, k)
 
 
 def cosine_near_dup_pairs(
@@ -612,15 +553,11 @@ def cosine_near_dup_pairs(
             .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
         )
     # one fold per candidate pair: norms were bound in the rejoin
-    # projections above (bit-identical to inline cosine). Zero-norm
-    # guard: NULL sim fails the threshold predicate on both engines.
+    # projections above
     return (
         cand.withColumn(
             "sim",
-            F.when(
-                F.col("nrm_a") * F.col("nrm_b") > 0,
-                dot(F.col("emb_a"), F.col("emb_b")) / (F.col("nrm_a") * F.col("nrm_b")),
-            ),
+            cosine_from_norms(F.col("emb_a"), F.col("emb_b"), F.col("nrm_a"), F.col("nrm_b")),
         )
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))

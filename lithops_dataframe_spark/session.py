@@ -17,6 +17,14 @@ Scale notes (100 TB design):
 - Arrow enabled for every pandas-UDF exchange (the only Python↔JVM
   data path we allow in hot paths).
 - Timezone pinned to UTC so timestamp semantics match the DuckDB oracle.
+- Shuffled hash join comes only from AQE's runtime-size-guarded rewrite
+  (64 MB per build partition); the estimate-driven static SHJ path stays
+  off (Spark's default ``preferSortMergeJoin=true``).
+
+Only deployment settings read the environment: master
+(``SPARK_GRAFT_MASTER``), CPUs (``SPARK_GRAFT_CPUS``), driver memory
+(``SPARK_GRAFT_DRIVER_MEM``), warehouse (``SPARK_GRAFT_WAREHOUSE``) and the
+fixture directory (``SPARK_GRAFT_SF_DIR``). Engine tuning is fixed here.
 """
 
 from __future__ import annotations
@@ -49,36 +57,13 @@ def get_spark(app_name: str = "lithops_dataframe_spark", *, shuffle_partitions: 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Joins (r12→r13, guide §3.1): allow SHUFFLED HASH JOIN instead of
-        # sort-merge when the per-partition build side fits — skips two
-        # sorts per join. Two separate switches, both env-parameterized:
-        #
-        # - The AQE rewrite (maxShuffledHashJoinLocalMapThreshold) is
-        #   size-guarded at RUNTIME: it only fires when every post-shuffle
-        #   build partition is under the threshold (sized to the per-task
-        #   memory budget on a real cluster — 64 MB is conservative for
-        #   multi-GB executors), and skew-join splitting stays on above it.
-        # - preferSortMergeJoin=false additionally opens the STATIC
-        #   planner's SHJ path (canBuildLocalHashMap — driven by
-        #   pre-execution size ESTIMATES, not runtime sizes; ADVICE r12).
-        #   SHJ builds are non-spillable, so a badly mis-estimated build
-        #   side can OOM an executor on a real cluster. r13 cold-process
-        #   interleaved A/B (plans/r13/tpch_cold_ab{32,8}.jsonl — 12+6
-        #   fresh JVMs, legs interleaved): static-SHJ vs AQE-only vs
-        #   no-SHJ medians 13.84/13.93/13.74 s at 32 cores and
-        #   11.90/12.45/13.05 at 8 — the r12 same-session win does NOT
-        #   reproduce cold; all legs are within host noise. The static
-        #   path is therefore DEFAULT-OFF (VERDICT r12 item 7): keep the
-        #   estimate-risk out, rely on the runtime-guarded AQE rewrite.
-        #   SPARK_GRAFT_PREFER_SMJ=false re-enables the static path.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64MB"),
-        )
+        # Shuffled hash join only through the AQE rewrite, which fires when
+        # every post-shuffle build partition is under 64 MB at RUNTIME. The
+        # static planner's SHJ path (preferSortMergeJoin=false) stays at
+        # Spark's default off: it sizes non-spillable builds from
+        # pre-execution estimates, so a mis-estimate can OOM an executor,
+        # and cold-process A/B showed no win for it (plans/r13/).
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # PySpark 4 captures a user-code stack trace on EVERY DataFrame API

@@ -6,12 +6,18 @@ counterpart).
 Shape: each micro-batch of arriving documents is probed against a
 STANDING LSH index persisted between batches (band postings + shingle
 sets of every document that has ever arrived), then appended to it via
-``foreachBatch``. Per-epoch cost is O(batch × bands) probe work against
-the index — never index × index — which is what makes continuous dedup
-of a 100 TB firehose viable: the index is a partitioned parquet layout
-keyed by epoch, each batch writes only its own partition, and the band
-postings join is hash-partitioned on the (uniform by construction)
-band key.
+``foreachBatch``. The per-epoch step IS the batch operator's core,
+:func:`~lithops_dataframe_spark.operators.dedup.incremental_decisions`,
+applied to index ∪ batch: index postings are "others" without the
+smaller-id rule, batch postings are "others" with it, and the shingle
+sets of both feed verification. This module only wires those inputs and
+writes the epoch's decisions and index partitions.
+
+Per-epoch cost is O(batch × bands) probe work against the index — never
+index × index — which is what makes continuous dedup of a 100 TB
+firehose viable: the index is a partitioned parquet layout keyed by
+epoch, each batch writes only its own partition, and the band postings
+join is hash-partitioned on the (uniform by construction) band key.
 
 Two deliberate semantics, documented because they ARE the production
 choices:
@@ -42,8 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from lithops_dataframe_spark.functions import hashing as H
-from lithops_dataframe_spark.operators.dedup import with_minhash
+from lithops_dataframe_spark.operators.dedup import band_postings, incremental_decisions, with_minhash
 from lithops_dataframe_spark.operators.util import ensure_parallelism
 from lithops_dataframe_spark.streaming import fsutil
 
@@ -107,62 +112,22 @@ def incremental_dedup_batch_step(
         .select(F.col(id_col).alias("id"), "__shingles", "__sig")
         .persist(StorageLevel.MEMORY_AND_DISK)  # bounded: one micro-batch
     )
-    posted = base.select(
-        "id", F.explode(H.band_signatures(F.col("__sig"), bands)).alias("band")
-    ).select(
-        "id",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
-    )
+    posted = band_postings(base, bands)
     idx_posted = _read_index(spark, f"{index_dir}/postings", _POSTINGS_SCHEMA, epoch_id)
-
-    # probe side: every already-indexed doc can drop an arriving doc; a
-    # batch-mate only if it arrived "earlier" (smaller id — deterministic
-    # first-wins inside the batch, same rule as the batch operator)
+    # every already-indexed doc can drop an arriving doc; a batch-mate only
+    # if it arrived "earlier" (smaller id — same first-wins rule as the
+    # batch operator)
     others = idx_posted.withColumn("require_lt", F.lit(False)).unionByName(
         posted.withColumn("require_lt", F.lit(True))
     )
-    a, b = posted.alias("a"), others.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") != F.col("b.id"))
-            & (~F.col("b.require_lt") | (F.col("b.id") < F.col("a.id"))),
-        )
-        .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("other_id"))
-        .dropDuplicates(["new_id", "other_id"])
-        # byte-small candidates, CPU-bound verify: pin full parallelism
-        .repartition(spark.sparkContext.defaultParallelism, "new_id", "other_id")
+    shingles = (
+        base.select("id", "__shingles")
+        .unionByName(_read_index(spark, f"{index_dir}/shingles", _SHINGLES_SCHEMA, epoch_id))
+        .withColumnRenamed("__shingles", "sh")
     )
-    sh_all = base.select("id", "__shingles").unionByName(
-        _read_index(spark, f"{index_dir}/shingles", _SHINGLES_SCHEMA, epoch_id)
-    )
-    cand = cand.join(
-        sh_all.select(F.col("id").alias("new_id"), F.col("__shingles").alias("sh_a")),
-        "new_id",
-    ).join(
-        sh_all.select(F.col("id").alias("other_id"), F.col("__shingles").alias("sh_b")),
-        "other_id",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    matches = cand.filter(inter / union >= threshold).select("new_id")
-    n_dup = matches.groupBy("new_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_prior_dups")
-    )
-    decisions = (
-        base.select("id")
-        .join(n_dup, F.col("id") == F.col("new_id"), "left")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.coalesce(F.col("n_prior_dups"), F.lit(0).cast("long")).alias(
-                "n_prior_dups"
-            ),
-            F.col("new_id").isNull().cast("int").alias("keep"),
-        )
-    )
+    decisions = incremental_decisions(
+        base, others, shingles, bands=bands, threshold=threshold
+    ).select(F.col("id").alias("doc_id"), F.col("n").alias("n_prior_dups"), "keep")
     # Writes keep the upstream task layout: A/B-measured at sf0.1, both
     # coalesce (collapses the probe pipeline: 7.4→8.9 s) and repartition
     # (extra exchanges: →8.4 s) lose to writing as-is. The standing index
@@ -178,13 +143,7 @@ def incremental_dedup_batch_step(
     base.unpersist()
 
 
-def compact_index(
-    spark,
-    index_dir: str,
-    before_epoch: int,
-    *,
-    target_partitions: int = 1,
-) -> int:
+def compact_index(spark, index_dir: str, before_epoch: int) -> int:
     """Periodic OPTIMIZE pass over the standing LSH index (VERDICT r8
     task 6): fold every ``epoch=<e>`` partition with ``e < before_epoch``
     into ONE consolidated partition, for both the postings and shingles
@@ -200,9 +159,8 @@ def compact_index(
     untouched, so decisions after compaction hash-match the uncompacted
     run (tests/test_incremental_dedup.py::test_compaction_preserves_decisions).
 
-    ``target_partitions`` sizes the consolidated write (1 for unit-scale;
-    at 100 TB pick index_bytes / file_target). Run it from a maintenance
-    trigger BETWEEN micro-batches — same slot where lakehouse engines
+    The consolidated write is one file per sub-index. Run it from a
+    maintenance trigger BETWEEN micro-batches — same slot where lakehouse engines
     schedule OPTIMIZE. Crash-safety: the consolidated data is fully
     written to a ``_compact_<sub>_epoch<dest>`` staging dir (ignored by
     Spark's partition discovery; the destination epoch is embedded in
@@ -253,7 +211,7 @@ def compact_index(
             .parquet(path)
             .filter(F.col("epoch") < before_epoch)
             .drop("epoch")
-            .coalesce(target_partitions)
+            .coalesce(1)
             .write.mode("overwrite")
             .parquet(tmp)
         )
@@ -277,7 +235,6 @@ def foreach_batch_incremental_dedup(
     threshold: float = 0.6,
     available_now: bool = True,
     compact_every: int | None = None,
-    compact_target_partitions: int = 1,
 ) -> StreamingQuery:
     """Wire :func:`incremental_dedup_batch_step` into a foreachBatch
     streaming query (availableNow replay by default).
@@ -291,12 +248,7 @@ def foreach_batch_incremental_dedup(
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
-            compact_index(
-                batch_df.sparkSession,
-                index_dir,
-                before_epoch=int(epoch_id),
-                target_partitions=compact_target_partitions,
-            )
+            compact_index(batch_df.sparkSession, index_dir, before_epoch=int(epoch_id))
         incremental_dedup_batch_step(
             batch_df,
             epoch_id,

@@ -77,12 +77,7 @@ def _run_leg(spark, sf_dir: str, epochs: int) -> dict:
             e = int(epoch_id)
             if COMPACT_EVERY and e > 0 and e % COMPACT_EVERY == 0:
                 c0 = time.perf_counter()
-                compact_index(
-                    batch_df.sparkSession,
-                    index_dir,
-                    before_epoch=e,
-                    target_partitions=1,
-                )
+                compact_index(batch_df.sparkSession, index_dir, before_epoch=e)
                 compact_secs[e] = time.perf_counter() - c0
             s0 = time.perf_counter()
             incremental_dedup_batch_step(
