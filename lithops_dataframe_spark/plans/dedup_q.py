@@ -330,6 +330,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lithops_dataframe_spark.streaming.dedup import (
         foreach_batch_incremental_dedup,
     )
+    from lithops_dataframe_spark.streaming.events import read_events_stream
     from lithops_dataframe_spark.streaming.staging import (
         await_or_raise,
         clamped_batch_expr,
@@ -352,11 +353,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         replay = _os.path.join(work, "replay")
         stage_microbatches(docs, batch_expr, 3, replay)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay + "/*.parquet")
-        )
+        stream = read_events_stream(spark, replay + "/*.parquet", docs.schema)
         q = foreach_batch_incremental_dedup(
             stream,
             _os.path.join(work, "index"),

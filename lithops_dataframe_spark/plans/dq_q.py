@@ -695,6 +695,7 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from lithops_dataframe_spark.streaming.drift import foreach_batch_ks_drift
+    from lithops_dataframe_spark.streaming.events import read_events_stream
     from lithops_dataframe_spark.streaming.staging import (
         await_or_raise,
         stage_microbatches,
@@ -733,11 +734,7 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ref.write.mode("overwrite").parquet(ref_path)
         replay = _os.path.join(work, "replay")
         stage_microbatches(strm_src.select("event_type", "v", "b"), F.col("b"), 3, replay)
-        stream = (
-            spark.readStream.schema("event_type string, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay + "/*.parquet")
-        )
+        stream = read_events_stream(spark, replay + "/*.parquet", "event_type string, v double")
         decisions = _os.path.join(work, "decisions")
         q = foreach_batch_ks_drift(
             stream,

@@ -6,6 +6,8 @@ the as-of and range joins go through the scalable operators in
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -13,10 +15,6 @@ from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.operators.joins import asof_join, interval_overlap_join, range_join
 from lithops_dataframe_spark.operators.util import values_frame
 from lithops_dataframe_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -28,8 +26,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -42,8 +40,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select("c_custkey", "c_mktsegment")
 
 
@@ -57,8 +55,8 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -80,8 +78,8 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cn = _t(spark, sf_dir, "customer").groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_cust"))
-    sn = _t(spark, sf_dir, "supplier").groupBy("s_nationkey").agg(F.count(F.lit(1)).alias("n_supp"))
+    cn = load_table(spark, sf_dir, "customer").groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_cust"))
+    sn = load_table(spark, sf_dir, "supplier").groupBy("s_nationkey").agg(F.count(F.lit(1)).alias("n_supp"))
     return cn.join(sn, cn.c_nationkey == sn.s_nationkey, "full").select(
         F.coalesce("c_nationkey", "s_nationkey").alias("nationkey"),
         F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
@@ -97,8 +95,8 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").select("r_name")
-    seg = _t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
+    region = load_table(spark, sf_dir, "region").select("r_name")
+    seg = load_table(spark, sf_dir, "customer").select("c_mktsegment").distinct()
     return region.crossJoin(seg)
 
 
@@ -117,8 +115,8 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l_partkey = p_partkey with the theta predicate as post-join filter —
     # no nested loop. part scales with SF (the size filter is a constant
     # fraction), so the join is AQE-sized rather than hint-broadcast.
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 50)
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 50)
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(
             part,
@@ -139,7 +137,7 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = events.filter(F.col("event_type") == "click").select(
         "user_id", "ts", F.round("value", 4).alias("click_value")
@@ -163,7 +161,7 @@ def join_asof_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass carry in :func:`asof_join` — no single-task window. The right
     side is deduped to one row per ts so the nearest match is unique and
     the DuckDB ASOF JOIN oracle is deterministic."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -203,7 +201,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the LATERAL oracle (min |Δt|, backward tie-break) is
     deterministic. Distances compare as epoch-seconds doubles derived
     from the same microsecond values in both engines."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -230,7 +228,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     bands = values_frame(
         events.sparkSession,
         [(0, 0.0, 25.0), (1, 25.0, 50.0), (2, 50.0, 100.0), (3, 100.0, 1000.0)],
@@ -263,8 +261,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortized over every subsequent join on the key."""
     import uuid
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     # unique names per invocation: managed-table LOCATIONS outlive the
     # in-memory catalog across sessions, so a fixed name + overwrite fails
     # with LOCATION_ALREADY_EXISTS in any later session
@@ -300,8 +298,8 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks."""
     from lithops_dataframe_spark.operators.joins import salted_join
 
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("o_custkey"))
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("o_custkey"))
     return (
         salted_join(o, c, "o_custkey", salt=8)
         .groupBy("o_orderstatus")
@@ -340,81 +338,31 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_types_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every non-temporal §2.3 join flavor in ONE driver-gate slot — semi,
-    anti, left outer, full outer, cross, and theta (equi + non-equi
-    residual) each run as a REAL join of that type and reduce to
-    (kind, n, checksum) rows, so a capped correctness sweep still verifies
-    the whole family (the per-flavor queries remain registered as
-    fine-grained twins). Temporal joins (as-of, range) keep their own
-    slots."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-
-    def one(kind: str, df: DataFrame, n: F.Column, checksum: F.Column) -> DataFrame:
-        return df.agg(
-            F.lit(kind).alias("kind"),
-            n.alias("n"),
-            checksum.cast("long").alias("checksum"),
-        )
-
-    semi = one(
-        "semi",
-        cust.join(
-            orders.filter(F.col("o_totalprice") > 100000),
-            cust.c_custkey == orders.o_custkey,
-            "left_semi",
+    """Every non-temporal §2.3 join flavor in ONE driver-gate slot. The six
+    legs ARE the standalone twins — join_semi, join_anti, join_left_outer,
+    join_full_outer, join_cross and join_theta — each reduced to one
+    (kind, n, checksum) row, so a capped correctness sweep verifies the
+    whole family against the same plans the twins' own oracles check.
+    Temporal joins (as-of, range) keep their own slots."""
+    legs = [
+        ("semi", join_semi, F.sum("c_custkey")),
+        ("anti", join_anti, F.coalesce(F.sum("c_custkey"), F.lit(0))),
+        ("left_outer", join_left_outer, F.sum("n_orders")),
+        ("full_outer", join_full_outer, F.sum(F.col("n_cust") + F.col("n_supp"))),
+        ("cross", join_cross, F.sum(F.length("r_name") + F.length("c_mktsegment"))),
+        ("theta", join_theta, F.sum("l_orderkey")),
+    ]
+    return reduce(
+        DataFrame.unionByName,
+        (
+            twin(spark, sf_dir).agg(
+                F.lit(kind).alias("kind"),
+                F.count(F.lit(1)).alias("n"),
+                checksum.cast("long").alias("checksum"),
+            )
+            for kind, twin, checksum in legs
         ),
-        F.count(F.lit(1)),
-        F.sum("c_custkey"),
     )
-    anti = one(
-        "anti",
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti"),
-        F.count(F.lit(1)),
-        F.coalesce(F.sum("c_custkey"), F.lit(0)),
-    )
-    left = one(
-        "left_outer",
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders")),
-        F.count(F.lit(1)),
-        F.sum("n_orders"),
-    )
-    cn = cust.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_cust"))
-    sn = _t(spark, sf_dir, "supplier").groupBy("s_nationkey").agg(F.count(F.lit(1)).alias("n_supp"))
-    full = one(
-        "full_outer",
-        cn.join(sn, cn.c_nationkey == sn.s_nationkey, "full").select(
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-        ),
-        F.count(F.lit(1)),
-        F.sum(F.col("n_cust") + F.col("n_supp")),
-    )
-    cross = one(
-        "cross",
-        _t(spark, sf_dir, "region").select("r_name").crossJoin(
-            cust.select("c_mktsegment").distinct()
-        ),
-        F.count(F.lit(1)),
-        F.sum(F.length("r_name") + F.length("c_mktsegment")),
-    )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 50)
-    li = _t(spark, sf_dir, "lineitem")
-    theta = one(
-        "theta",
-        li.join(
-            part,
-            (li.l_partkey == part.p_partkey) & (li.l_extendedprice > part.p_retailprice * 20),
-        ),
-        F.count(F.lit(1)),
-        F.sum("l_orderkey"),
-    )
-    out = semi
-    for piece in (anti, left, full, cross, theta):
-        out = out.unionByName(piece)
-    return out
 
 
 _OVERLAP_ORACLE = """
@@ -502,7 +450,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     credit a click from days ago). The tolerance is a zero-shuffle
     post-predicate on the matched timestamp (operators/joins.py), so the
     plan is identical to the plain as-of plus one projection."""
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )

@@ -12,6 +12,8 @@ Doubles are rounded (builder + oracle identically) per registry discipline.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -155,34 +157,31 @@ def red_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
 def red_stats_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One driver-checkable row proving the whole reference reduction
     surface (min/max/mean/std/all/any/prod — reference core.py:264-404)
-    through the LDFrame veneer; one-row crossJoins are literal-sized."""
-    li = load_table(spark, sf_dir, "lineitem")
-    mn = LDFrame(li.select("l_quantity")).min().select(
-        F.round(F.col("l_quantity"), 2).alias("min_qty")
-    )
-    mx = LDFrame(li.select("l_extendedprice")).max().select(
-        F.round(F.col("l_extendedprice"), 2).alias("max_price")
-    )
-    mean = LDFrame(li.select("l_discount")).mean().select(
-        F.round(F.col("l_discount"), 4).alias("mean_disc")
-    )
-    std = LDFrame(li.select("l_tax")).std(ddof=1).select(
-        F.round(F.col("l_tax"), 4).alias("std_tax")
-    )
-    alls = LDFrame(li.select((F.col("l_quantity") != 0).alias("q"))).all().select(
-        F.col("q").alias("all_qty_nonzero")
-    )
-    anys = LDFrame(li.select((F.col("l_tax") != 0).alias("t"))).any().select(
-        F.col("t").alias("any_tax_nonzero")
-    )
-    pr = (
+    through the LDFrame veneer; one-row crossJoins are literal-sized.
+
+    The min, max, mean, std and all/any columns ARE the standalone twins
+    (red_min_axis0, red_max_axis0, red_mean_axis0, red_std_axis0,
+    red_all_any), each projected to one column. The prod leg stays inline:
+    red_prod cross-joins an ``n_rows`` count that column pruning does not
+    remove, which would add two exchanges, a broadcast and a lineitem
+    scan."""
+    legs = [
+        red_min_axis0(spark, sf_dir).select(F.col("l_quantity").alias("min_qty")),
+        red_max_axis0(spark, sf_dir).select(F.col("l_extendedprice").alias("max_price")),
+        red_mean_axis0(spark, sf_dir).select(F.col("l_discount").alias("mean_disc")),
+        red_std_axis0(spark, sf_dir).select(F.col("l_tax").alias("std_tax")),
+        red_all_any(spark, sf_dir).select(
+            F.col("all_qty").alias("all_qty_nonzero"), F.col("any_tax").alias("any_tax_nonzero")
+        ),
         LDFrame(
-            li.filter(F.col("l_orderkey") <= 8).select((1 + F.col("l_tax")).alias("p"))
+            load_table(spark, sf_dir, "lineitem")
+            .filter(F.col("l_orderkey") <= 8)
+            .select((1 + F.col("l_tax")).alias("p"))
         )
         .prod()
-        .select(F.round(F.col("p"), 6).alias("prod_tax_factor"))
-    )
-    return mn.crossJoin(mx).crossJoin(mean).crossJoin(std).crossJoin(alls).crossJoin(anys).crossJoin(pr)
+        .select(F.round(F.col("p"), 6).alias("prod_tax_factor")),
+    ]
+    return reduce(DataFrame.crossJoin, legs)
 
 
 @register(

@@ -233,68 +233,46 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_funcs_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String + date + math + array function families (§2.8) in ONE
-    driver-gate slot: each family runs over its own table slice and melts
-    to (family, key, val_str, val_num) so a capped correctness sweep
-    verifies all four; JSON + map keep an events-table slot
-    (scalar_json_map_events) and the per-family queries remain as
-    fine-grained twins."""
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 1000)
-    strings = p.select(
+    driver-gate slot: each family melts to (family, key, val_str, val_num)
+    so a capped correctness sweep verifies all four. The four families ARE
+    the standalone twins (scalar_string_funcs, scalar_date_funcs,
+    scalar_math_funcs, scalar_array_funcs); the combined query only narrows
+    their key filters and folds their columns. JSON + map keep an
+    events-table slot (scalar_json_map_events)."""
+    strings = scalar_string_funcs(spark, sf_dir).filter(F.col("p_partkey") <= 1000).select(
         F.lit("string").alias("family"),
         F.col("p_partkey").cast("long").alias("key"),
         F.concat_ws(
-            "|",
-            F.upper("p_brand"),
-            F.lower("p_type"),
-            F.substring("p_name", 1, 5),
-            F.concat_ws(":", "p_brand", "p_type"),
-            F.regexp_replace("p_brand", "Brand#", "B"),
-            F.regexp_extract("p_brand", "([0-9]+)", 1),
-            F.split_part("p_type", F.lit(" "), F.lit(1)),
+            "|", "brand_upper", "type_lower", "name_prefix", "brand_type",
+            "brand_short", "brand_num", "type_first_word",
         ).alias("val_str"),
-        F.length("p_name").cast("double").alias("val_num"),
+        F.col("name_len").cast("double").alias("val_num"),
     )
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1000)
-    dates = o.select(
+    dates = scalar_date_funcs(spark, sf_dir).filter(F.col("o_orderkey") <= 1000).select(
         F.lit("date").alias("family"),
         F.col("o_orderkey").cast("long").alias("key"),
         F.concat_ws(
-            "|",
-            F.date_trunc("month", "o_orderdate").cast("date").cast("string"),
-            (F.col("o_orderdate").cast("date") + F.expr("INTERVAL 30 DAYS")).cast("string"),
+            "|", F.col("month_start").cast("string"), F.col("due_ts").cast("date").cast("string")
         ).alias("val_str"),
-        (
-            F.year("o_orderdate") * 10000
-            + F.month("o_orderdate") * 100
-            + F.dayofmonth("o_orderdate")
-            + F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
-        )
+        (F.col("yr") * 10000 + F.col("mon") * 100 + F.col("dom") + F.col("days_since_epoch_start"))
         .cast("double")
         .alias("val_num"),
     )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 500)
-    maths = li.select(
+    maths = scalar_math_funcs(spark, sf_dir).filter(F.col("l_orderkey") <= 500).select(
         F.lit("math").alias("family"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("long").alias("key"),
         F.lit(None).cast("string").alias("val_str"),
         F.round(
-            F.round(F.abs(F.col("l_discount") - 0.05), 4)
-            + F.floor(F.col("l_quantity") / 7)
-            + F.ceil(F.col("l_extendedprice") / 1000)
-            + F.round(F.sqrt("l_quantity"), 6)
-            + F.round(F.pow(1 + F.col("l_tax"), 2), 6)
-            + F.round(F.log("l_extendedprice"), 6)
-            + F.signum(F.col("l_discount") - 0.05),
+            F.col("abs_disc") + F.col("qty_bucket") + F.col("price_k") + F.col("qty_sqrt")
+            + F.col("tax_sq") + F.col("price_ln") + F.col("disc_sign"),
             6,
         ).alias("val_num"),
     )
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    toks = F.split("text", " ")
-    arrays = docs.select(
+    arrays = scalar_array_funcs(spark, sf_dir).select(
         F.lit("array").alias("family"),
         F.col("doc_id").cast("long").alias("key"),
-        F.array_join(F.slice(F.array_sort(F.array_distinct(toks)), 1, 3), ",").alias("val_str"),
-        (F.size(toks) * 1000 + F.size(F.array_distinct(toks))).cast("double").alias("val_num"),
+        F.col("first3").alias("val_str"),
+        (F.col("n_tokens") * 1000 + F.col("n_unique")).cast("double").alias("val_num"),
     )
     return strings.unionByName(dates).unionByName(maths).unionByName(arrays)
 

@@ -3,6 +3,8 @@ distinct/cube/rollup — all ABSENT in the reference, required surface)."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -198,28 +200,29 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every §2.7 set operation + count_distinct in one driver-checkable
-    result (one tagged count per operator); each leg is the same plan as
-    its standalone query, the union is 5 one-row frames."""
+    result, one tagged count per operator. The intersect, except and
+    distinct legs ARE the standalone twins (setop_intersect, setop_except,
+    setop_distinct). Two legs stay inline: union_all, because its twin
+    pre-groups by kind and summing those counts adds an exchange; and
+    count_distinct, because its twin counts per status and per-status
+    distinct counts do not sum to the global one."""
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
-    o = load_table(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
 
-    def tag(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(name).alias("op"), "n")
+    def tag(op: str, df: DataFrame) -> DataFrame:
+        return df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(op).alias("op"), "n")
 
     legs = [
         tag("union_all", c.unionByName(s)),
-        tag("intersect", c.intersect(s)),
-        tag("except", c.subtract(s)),
-        tag("distinct", o.select("o_orderstatus", "o_orderpriority").distinct()),
-        o.agg(F.countDistinct("o_custkey").alias("n")).select(
+        tag("intersect", setop_intersect(spark, sf_dir)),
+        tag("except", setop_except(spark, sf_dir)),
+        tag("distinct", setop_distinct(spark, sf_dir)),
+        orders.agg(F.countDistinct("o_custkey").alias("n")).select(
             F.lit("count_distinct").alias("op"), "n"
         ),
     ]
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    return reduce(DataFrame.unionByName, legs)
 
 
 @register(
@@ -258,53 +261,40 @@ def setop_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_shapes_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rollup + cube + pivot + melt (unpivot), each reduced to
     (op, n_groups, chk) — one slot in the driver sweep proves all four
-    grouping shapes end-to-end."""
+    grouping shapes end-to-end. The rollup, cube and pivot legs ARE the
+    standalone twins (agg_rollup, agg_cube, agg_pivot). The melt leg stays
+    inline: its twin agg_unpivot_melt rounds each amount before the sum,
+    which would change ``chk``."""
     from lithops_dataframe_spark.frame import LDFrame
 
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-
-    rollup = (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.round(F.sum("total"), 2).alias("chk"),
-        )
-        .select(F.lit("rollup").alias("op"), "n_groups", "chk")
-    )
-    cube = (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("qty"))
-        .agg(F.count(F.lit(1)).alias("n_groups"), F.round(F.sum("qty"), 2).alias("chk"))
-        .select(F.lit("cube").alias("op"), "n_groups", "chk")
-    )
-    pivot = (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-        .agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.round(F.sum(F.coalesce("O", F.lit(0.0)) + F.coalesce("F", F.lit(0.0))), 2).alias(
-                "chk"
-            ),
-        )
-        .select(F.lit("pivot").alias("op"), "n_groups", "chk")
-    )
     melted = LDFrame(
-        li.filter(F.col("l_orderkey") < 100).select(
+        load_table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_orderkey") < 100)
+        .select(
             F.col("l_extendedprice").alias("price"),
             F.col("l_discount").alias("discount"),
             F.col("l_tax").alias("tax"),
         )
     ).melt([], ["price", "discount", "tax"], "kind", "amount")
-    melt = (
-        melted.spark.agg(
-            F.count(F.lit(1)).alias("n_groups"), F.round(F.sum("amount"), 2).alias("chk")
-        )
-        .select(F.lit("melt").alias("op"), "n_groups", "chk")
+    legs = [
+        ("rollup", agg_rollup(spark, sf_dir), F.sum("total")),
+        ("cube", agg_cube(spark, sf_dir), F.sum("sum_qty")),
+        (
+            "pivot",
+            agg_pivot(spark, sf_dir),
+            F.sum(F.coalesce("qty_O", F.lit(0.0)) + F.coalesce("qty_F", F.lit(0.0))),
+        ),
+        ("melt", melted.spark, F.sum("amount")),
+    ]
+    return reduce(
+        DataFrame.unionByName,
+        (
+            df.agg(F.count(F.lit(1)).alias("n_groups"), F.round(chk, 2).alias("chk")).select(
+                F.lit(op).alias("op"), "n_groups", "chk"
+            )
+            for op, df, chk in legs
+        ),
     )
-    return rollup.unionByName(cube).unionByName(pivot).unionByName(melt)
 
 
 @register(

@@ -187,11 +187,7 @@ def stream_merge_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
         ).withColumn("part", F.col("user_id") % 8)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay + "/*.parquet")
-    )
+    stream = SE.read_events_stream(spark, replay + "/*.parquet", ev.schema)
     q = foreach_batch_merge_upsert_sink(
         stream,
         target,

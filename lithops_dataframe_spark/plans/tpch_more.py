@@ -25,10 +25,6 @@ from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.plans.registry import register
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q04_priority_with_late_lines",
     oracle="""
@@ -46,10 +42,10 @@ def _t(spark, sf_dir, name):
 def q04_priority_with_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS → left-semi join (no fact duplication),
     then a small-key aggregate."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     hit = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
@@ -87,12 +83,12 @@ def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers — at 100 TB the fact shuffle carries the nation-pair slice,
     not the whole join (the q02-exponent trick, r5 verdict task 6). The
     residual pair filter then runs on the already-reduced join output."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
     n = (
-        _t(spark, sf_dir, "nation")
+        load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name")
         .filter(F.col("n_name").isin("NATION_1", "NATION_2"))
     )
@@ -152,12 +148,12 @@ def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: 4-table join → groupBy → top-20
     (TakeOrderedAndProject; deterministic tie-break on custkey)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     rev = (
         li.join(o.select("o_orderkey", "o_custkey"), li.l_orderkey == o.o_orderkey)
         .join(c.select("c_custkey", "c_name", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
@@ -188,8 +184,8 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     """TPC-H Q13 shape: left outer join preserving zero-order customers,
     then a second aggregation over the first's output (two exchanges,
     second one tiny)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -220,15 +216,15 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantities sum past a threshold) → semi-join-shaped filter, then the
     detail join re-aggregates. The `big` aggregate shuffles once on
     orderkey and its output is small."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("tq"))
         .filter(F.col("tq") > 150)
         .select(F.col("l_orderkey").alias("big_orderkey"))
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         o.join(big, o.o_orderkey == big.big_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -274,9 +270,9 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers at sf0.001 / sf0.01). The anti-join side is pre-filtered by
     the date BEFORE the shuffle, so at 100 TB only the recent slice of
     orders moves."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     avg_bal = c.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("ab"))
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= "2000-01-01"
     ).select("o_custkey")
     rich = c.crossJoin(F.broadcast(avg_bal)).filter(F.col("c_acctbal") > F.col("ab"))
@@ -302,10 +298,10 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional aggregation in one scan; the part
     join is AQE-sized (part scales with SF)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-02-01")
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     j = li.join(p, li.l_partkey == p.p_partkey)
     return j.agg(
@@ -334,8 +330,8 @@ def q19_brand_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs predicate spanning both join sides —
     Catalyst pushes the part-only disjuncts below the join and keeps the
     mixed conjuncts as the join filter."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     j = li.join(p, li.l_partkey == p.p_partkey)
     band = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15)

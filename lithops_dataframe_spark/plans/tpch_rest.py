@@ -40,10 +40,6 @@ from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.plans.registry import register
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
@@ -81,8 +77,8 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e.g. 26.2412499…97) differs between Spark's HALF_UP-on-binary and
     DuckDB's rounding. The driver's %.9g normalization compares the raw
     doubles exactly."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "STANDARD") & (F.col("p_size") < 25)
     ).select("p_partkey", "p_name")
     # Semi-join the qualifying-part filter into lineitem BEFORE the offer
@@ -104,8 +100,8 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # attach the part columns to the tiny best-offer frame only
     best = best.join(p, best.l_partkey == p.p_partkey)
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         best.join(s, best.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -140,19 +136,19 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier scale with SF, so their joins are left to AQE — broadcast
     while small, shuffle at 100 TB. The final per-year aggregate is one
     tiny shuffle."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_partkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select("r_regionkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select("r_regionkey")
     cn = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
         F.col("n_nationkey").alias("cn_key")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     sn = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
     j = (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -194,15 +190,15 @@ def q09_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-cent grid points sit EXACTLY on the 2-decimal rounding boundary
     and engine summation-order noise flips them; at the grid's own
     resolution rounding is noise-immune."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice", "l_discount"
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%")).select(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%")).select(
         "p_partkey", "p_retailprice"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     profit = _rev() - 0.4 * F.col("p_retailprice") * F.col("l_quantity")
     j = (
         li.join(p, li.l_partkey == p.p_partkey)
@@ -243,9 +239,9 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses raw sums; the 2×avg cut keeps qualifying parts far from the cut
     line (value gaps ≫ ulp noise). The multiple-of-average criterion is
     scale-free (a fixed fraction-of-total empties as part count grows)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2).select("n_nationkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2).select("n_nationkey")
     vals = (
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -280,10 +276,10 @@ def q12_late_line_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped by a line attribute (linestatus stands in for the fixture's
     missing shipmode; lateness = shipped >45 days after order). The
     cross-table inequality stays as the join's residual filter."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < "1997-01-01").select(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < "1997-01-01").select(
         "l_orderkey", "l_linestatus", "l_shipdate"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
     j = li.join(o, li.l_orderkey == o.o_orderkey).filter(
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 45 DAYS")
     )
@@ -315,12 +311,12 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max, so cross-engine ulp drift cannot change the winner unless two
     suppliers tie to within float noise (revenue gaps ≫ ulp). One
     shuffle on suppkey; the scalar max broadcasts back."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-07-01")
     )
     rev = li.groupBy("l_suppkey").agg(F.sum(_rev()).alias("total_rev"))
     best = rev.agg(F.max("total_rev").alias("best_rev"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         rev.crossJoin(F.broadcast(best))
         .filter(F.col("total_rev") == F.col("best_rev"))
@@ -357,9 +353,9 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join and the distinct-aggregate shuffle by its selectivity
     (the q02 semi-below-the-aggregate lesson applied to Q16); one real
     Exchange total at scale."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
@@ -388,8 +384,8 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     AVG over partkey (one shuffle, no rejoin). l_quantity is integral in
     the fixtures, so AVG = exact-int-sum / count is bit-identical across
     engines and the `<` comparison cannot flip."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity", "l_extendedprice")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2").select("p_partkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity", "l_extendedprice")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2").select("p_partkey")
     branded = li.join(p, li.l_partkey == p.p_partkey)
     w = Window.partitionBy("l_partkey")
     return (
@@ -426,10 +422,10 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the follow-on joins are AQE-sized (part and supplier scale with SF;
     nation keeps its broadcast hint). Integral quantities make the
     threshold exact."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     ).select("l_suppkey", "l_partkey", "l_quantity")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select("p_partkey")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select("p_partkey")
     shipped = (
         li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
@@ -438,8 +434,8 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         s.join(shipped, s.s_suppkey == shipped.l_suppkey, "left_semi")
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -483,10 +479,10 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts the filtered side while it fits and falls back to a
     shuffle join at 100 TB, where the window then rides the join's
     orderkey exchange."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     lines = li.join(o, li.l_orderkey == o.o_orderkey).withColumn(
         "is_late",
         (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")).cast("int"),
@@ -500,7 +496,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter((F.col("is_late") == 1) & (F.col("n_supps") > 1) & (F.col("n_late_supps") == 1))
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         sole_late_lines.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")

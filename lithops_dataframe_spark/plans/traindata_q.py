@@ -964,6 +964,7 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from lithops_dataframe_spark.streaming.events import read_events_stream
     from lithops_dataframe_spark.streaming.reservoir import (
         foreach_batch_reservoir,
     )
@@ -989,11 +990,7 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         replay = _os.path.join(work, "replay")
         stage_microbatches(docs, batch_expr, 3, replay)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay + "/*.parquet")
-        )
+        stream = read_events_stream(spark, replay + "/*.parquet", docs.schema)
         state_dir = _os.path.join(work, "state")
         q = foreach_batch_reservoir(
             stream,

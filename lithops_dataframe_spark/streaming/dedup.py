@@ -51,6 +51,7 @@ from pyspark.sql.streaming import StreamingQuery
 from lithops_dataframe_spark.operators.dedup import band_postings, incremental_decisions, with_minhash
 from lithops_dataframe_spark.operators.util import ensure_parallelism
 from lithops_dataframe_spark.streaming import fsutil
+from lithops_dataframe_spark.streaming.sinks import start_foreach_batch
 
 _POSTINGS_SCHEMA = T.StructType(
     [
@@ -233,11 +234,10 @@ def foreach_batch_incremental_dedup(
     shingle_n: int = 2,
     bands: int = 4,
     threshold: float = 0.6,
-    available_now: bool = True,
     compact_every: int | None = None,
 ) -> StreamingQuery:
     """Wire :func:`incremental_dedup_batch_step` into a foreachBatch
-    streaming query (availableNow replay by default).
+    streaming query that drains every available input and stops.
 
     ``compact_every=N`` runs :func:`compact_index` BEFORE every N-th
     epoch's probe (the between-micro-batches maintenance slot), folding
@@ -261,11 +261,4 @@ def foreach_batch_incremental_dedup(
             threshold=threshold,
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, apply, checkpoint)

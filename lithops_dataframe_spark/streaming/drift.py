@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from lithops_dataframe_spark.operators.evaluation import ks_two_sample_by_group
+from lithops_dataframe_spark.streaming.sinks import start_foreach_batch
 
 
 def ks_drift_batch_step(
@@ -68,10 +69,9 @@ def foreach_batch_ks_drift(
     *,
     group_col: str,
     value_col: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Wire :func:`ks_drift_batch_step` into a foreachBatch streaming
-    query (availableNow replay by default)."""
+    query that drains every available input and stops."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         ks_drift_batch_step(
@@ -83,11 +83,4 @@ def foreach_batch_ks_drift(
             value_col=value_col,
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, apply, checkpoint)

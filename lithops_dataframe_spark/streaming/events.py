@@ -35,7 +35,8 @@ WATERMARK = "1 day"
 
 
 def read_events_stream(spark: SparkSession, events_dir: str, schema) -> DataFrame:
-    """File-source replay of an events directory (parquet), 1 file/trigger.
+    """File-source replay of a parquet directory or glob (events, or any
+    staged micro-batch files), 1 file/trigger.
 
     At scale the same plan reads from Kafka — only this reader changes.
     """

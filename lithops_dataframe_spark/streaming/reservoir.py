@@ -29,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from lithops_dataframe_spark.operators.sampling import weighted_reservoir_sample
 from lithops_dataframe_spark.streaming import fsutil
+from lithops_dataframe_spark.streaming.sinks import start_foreach_batch
 
 
 def _state_schema(extra: dict[str, str]) -> T.StructType:
@@ -99,13 +100,12 @@ def foreach_batch_reservoir(
     id_col: str,
     k: int,
     extra: dict[str, str],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Wire :func:`reservoir_batch_step` into a foreachBatch streaming
-    query (availableNow replay by default). After the stream drains, the
-    newest ``state/epoch=*`` partition IS the weighted reservoir of every
-    row that ever arrived — equal by construction to the batch operator
-    over the union of all batches."""
+    query that drains every available input and stops. After the stream
+    drains, the newest ``state/epoch=*`` partition IS the weighted
+    reservoir of every row that ever arrived — equal by construction to
+    the batch operator over the union of all batches."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         reservoir_batch_step(
@@ -118,11 +118,4 @@ def foreach_batch_reservoir(
             extra=extra,
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, apply, checkpoint)

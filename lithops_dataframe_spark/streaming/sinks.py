@@ -8,30 +8,47 @@
   comes from keying the write by ``epoch_id`` (a retried batch overwrites
   its own directory instead of appending twice) — the standard recipe for
   exactly-once with arbitrary sinks.
+- :func:`start_foreach_batch` — the one start path every foreachBatch
+  stream in the engine goes through (checkpointed, availableNow).
 
-Both are verified in tests/test_streaming_sinks.py: replayed events in →
+The two sinks are verified in tests/test_streaming_sinks.py: replayed events in →
 files out → read-back equals the batch input exactly.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 
-def write_stream_parquet(
-    stream_df: DataFrame, path: str, checkpoint: str, *, available_now: bool = True
-) -> StreamingQuery:
-    """Exactly-once parquet append sink (checkpointed file manifest)."""
-    w = (
+def write_stream_parquet(stream_df: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
+    """Exactly-once parquet append sink (checkpointed file manifest),
+    draining every available input (availableNow) and stopping."""
+    return (
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+
+
+def start_foreach_batch(
+    stream_df: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint: str
+) -> StreamingQuery:
+    """The one start path of every foreachBatch stream: run ``fn(batch,
+    epoch_id)`` per micro-batch under ``checkpoint``, draining every
+    available input (availableNow) and stopping."""
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def merge_apply(
@@ -81,7 +98,6 @@ def foreach_batch_merge_upsert_sink(
     transform,
     key_col: str,
     part_col: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """foreachBatch MERGE sink — the streaming CDC-apply pattern: each
     micro-batch is ``transform``-ed into keyed rows and MERGED into the
@@ -101,19 +117,10 @@ def foreach_batch_merge_upsert_sink(
             transform(batch_df), path, key_col=key_col, part_col=part_col
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, apply, checkpoint)
 
 
-def foreach_batch_epoch_sink(
-    stream_df: DataFrame, path: str, checkpoint: str, *, available_now: bool = True
-) -> StreamingQuery:
+def foreach_batch_epoch_sink(stream_df: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
     """foreachBatch sink with epoch-keyed idempotent writes.
 
     Each micro-batch lands in ``path/epoch=<id>`` with mode=overwrite:
@@ -124,11 +131,4 @@ def foreach_batch_epoch_sink(
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
 
-    w = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, write_batch, checkpoint)

@@ -54,6 +54,8 @@ def _run_leg(spark, sf_dir: str, epochs: int) -> dict:
         compact_index,
         incremental_dedup_batch_step,
     )
+    from lithops_dataframe_spark.streaming.events import read_events_stream
+    from lithops_dataframe_spark.streaming.sinks import start_foreach_batch
     from lithops_dataframe_spark.streaming.staging import (
         await_or_raise,
         clamped_batch_expr,
@@ -94,18 +96,8 @@ def _run_leg(spark, sf_dir: str, epochs: int) -> dict:
             epoch_secs[e] = time.perf_counter() - s0
 
         t0 = time.perf_counter()
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay + "/*.parquet")
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(work, "_ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        stream = read_events_stream(spark, replay + "/*.parquet", docs.schema)
+        q = start_foreach_batch(stream, apply, os.path.join(work, "_ckpt"))
         await_or_raise(q, 1800, f"sf1_dryrun_stream[{sf_dir}]")
         total_s = time.perf_counter() - t0
         dec = spark.read.parquet(decisions_dir)
