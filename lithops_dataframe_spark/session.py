@@ -103,10 +103,12 @@ def get_spark(app_name: str = "lithops_dataframe_spark", *, shuffle_partitions: 
     # Silence WindowExec's "No Partition Defined … single partition"
     # warning: every partition-less window in this engine is a two-phase
     # CARRY frame over ~#partitions rows (global_row_number's offsets,
-    # the prefix-sum totals in evaluation.py) — bounded by design and
-    # cleared by the plan audit — but it fired on every bench/sweep run,
-    # burying any REAL one-task-window regression (r9 verdict task 5).
-    # tools/explain_audit.py remains the detector for unbounded ones.
+    # the prefix-sum totals in evaluation.py) — bounded by design — but
+    # it fired on every bench/sweep run, burying any REAL one-task-window
+    # regression (r9 verdict task 5). The detector for unbounded ones is
+    # tests/test_oracle_queries.py: every registered query's executed
+    # plan must feed each partition-less Window an aggregated or
+    # literal-bounded input (tests/conftest.py::assert_plan_scales).
     try:
         jvm = spark._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -74,3 +74,72 @@ def assert_df_equal(spark_df, duck_rel, *, check_order: bool = False):
     assert len(sp_rows) == len(dk_rows), f"row counts differ: {len(sp_rows)} vs {len(dk_rows)}"
     for i, (a, b) in enumerate(zip(sp_rows, dk_rows)):
         assert a == b, f"row {i} differs:\n  spark: {a}\n  duckdb: {b}"
+
+
+def plan_nodes(plan):
+    """Yield every node of an executed plan, descending as
+    ``perfbench.tracer.plan_counts`` does (AdaptiveSparkPlan's final plan,
+    query stages, subqueries) and also into what that walk stops at: the
+    exchange a ReusedExchange reuses and the cached plan behind an
+    InMemoryTableScan."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(_plan_inputs(node))
+
+
+def _plan_inputs(node) -> list:
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    if name == "ReusedExchange":
+        return [node.child()]
+    if name == "InMemoryTableScan":
+        return [node.relation().cachedPlan()]
+    if name == "ReusedSubquery":
+        return []
+    out = []
+    for seq in (node.children(), node.subqueries()):
+        it = seq.iterator()
+        while it.hasNext():
+            out.append(it.next())
+    return out
+
+
+_BOUNDED_LEAVES = ("Scan OneRowRelation", "LocalTableScan", "Range")
+_AGGREGATES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
+
+
+def is_bounded(node) -> bool:
+    """True if a subtree's row count is fixed by construction: every path
+    down from ``node`` passes a grouping-free aggregate (one row whatever
+    it reads) or ends at a literal leaf (OneRowRelation, LocalTableScan,
+    Range)."""
+    name = node.nodeName()
+    if name in _AGGREGATES and node.groupingExpressions().isEmpty():
+        return True
+    inputs = _plan_inputs(node)
+    return all(map(is_bounded, inputs)) if inputs else name in _BOUNDED_LEAVES
+
+
+def assert_plan_scales(df) -> int:
+    """Count the nested-loop joins in ``df``'s executed plan whose build
+    side is not bounded by construction, after asserting the plan's
+    scale rules: no CartesianProduct, and every partition-less Window
+    reads a bounded or aggregated input (one task sorts that input)."""
+    n = 0
+    for node in plan_nodes(df._jdf.queryExecution().executedPlan()):
+        name = node.nodeName()
+        assert name != "CartesianProduct", "CartesianProduct in the executed plan"
+        if name == "BroadcastNestedLoopJoin":
+            build = node.left() if node.buildSide().toString() == "BuildLeft" else node.right()
+            n += not is_bounded(build)
+        elif name == "Window" and node.partitionSpec().isEmpty():
+            child = node.child()
+            assert is_bounded(child) or any(
+                m.nodeName() in _AGGREGATES for m in plan_nodes(child)
+            ), "partition-less Window over an unaggregated input"
+    return n

@@ -1,6 +1,7 @@
-"""The plan-audit battery's ``--lazy-all`` mode must cover the whole
-registry minus a DOCUMENTED eager-builder list (VERDICT r6 task 8) — and
-that list must stay exact as the registry evolves:
+"""``tools/eager_builders.txt`` names the builders that run Spark jobs
+while constructing their frame; ``bench.py`` gives exactly these a
+phase-local warmup and a best-of-4 timing. The list must stay exact as the
+registry evolves:
 
 - every name in tools/eager_builders.txt is a registered query,
 - detection at sf0.001 agrees with the file: a builder that runs Spark
@@ -8,8 +9,7 @@ that list must stay exact as the registry evolves:
 
 Detection builds every registered query once (construction only, no
 result materialization), so this costs roughly the eager builders'
-sf0.001 training/streaming work — a couple of minutes, the price of
-"a new query cannot land unaudited".
+sf0.001 training/streaming work — a couple of minutes.
 """
 
 from __future__ import annotations
@@ -48,9 +48,9 @@ def test_eager_list_matches_detection(spark, sf_dir):
     stale = documented - detected
     assert not undocumented, (
         "builders run Spark jobs at construction but are missing from "
-        f"tools/eager_builders.txt (they would dodge --lazy-all): {sorted(undocumented)}"
+        f"tools/eager_builders.txt (bench.py would time them single-shot): {sorted(undocumented)}"
     )
     assert not stale, (
         "builders listed eager but detected lazy — remove them so "
-        f"--lazy-all audits them again: {sorted(stale)}"
+        f"bench.py stops re-running them: {sorted(stale)}"
     )

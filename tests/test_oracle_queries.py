@@ -1,6 +1,16 @@
 """Differential test: every registered query with an oracle must match DuckDB
 on the smoke fixture (the driver's t2 gate runs the same comparison at
-sf0.01; running it here at sf0.001 keeps the suite fast)."""
+sf0.01; running it here at sf0.001 keeps the suite fast).
+
+The same run checks each query's executed plan for the shapes that do not
+scale (``conftest.assert_plan_scales``): no CartesianProduct, no
+partition-less Window over an unaggregated input, and no nested-loop join
+whose build side is data-sized. A nested-loop join is the quadratic
+all-pairs plan that candidate-generation joins exist to avoid, so the only
+data-sided ones allowed are the brute-force baselines below, each of which
+scores a bounded query set against one corpus scan. The list is exact: an
+entry whose query no longer plans a data-sided nested-loop join fails too.
+"""
 
 from __future__ import annotations
 
@@ -8,7 +18,26 @@ import pytest
 
 from lithops_dataframe_spark.plans import QUERIES, ORACLES
 
-from tests.conftest import assert_df_equal
+from tests.conftest import assert_df_equal, assert_plan_scales
+
+#: query -> why its data-sided nested-loop join is bounded anyway
+BRUTE_FORCE_JOINS = {
+    "decontaminate_semantic": "bounded held-out benchmark set scored against the corpus",
+    "dedup_ensemble_agreement": "composes the exact embedding near-dup baseline",
+    "emb_binary_quantize_recall": "5-query Hamming scorer plus its full-precision top-k leg",
+    "emb_hard_negative_mining": "5-anchor frame scored against the corpus",
+    "emb_matryoshka_recall": "5-row query frame (vec_id < literal) against the corpus",
+    "join_cross_region_segment": "5-row region x enum-bounded segment frame, a cross join by definition",
+    "join_types_combined": "its cross piece is the join_cross_region_segment frame",
+    "retrieval_hybrid_rrf": "semantic leg: 4-row literal query set against the corpus",
+    "retrieval_mmr_rerank": "3-anchor top-20 pools; the pair matrix is k^2 per anchor",
+    "retrieval_rbo_lex_vs_sem": "BM25 query literals and cosine anchors against the corpus",
+    "retrieval_rerank_features": "inherits retrieval_hybrid_rrf's semantic leg behind a persist",
+    "sim_adc_topk_pq": "vec_id < _N_Q query frame scored against the PQ codes",
+    "sim_cosine_neardup_exact": "exact all-pairs baseline; sim_cosine_neardup_lsh is the scaling path",
+    "sim_cosine_topk_bruteforce": "_N_QUERIES-row query frame against the corpus; ANN is the scaling path",
+    "sim_knn_label_vote": "20-row query frame (vec_id < 20) against the labelled corpus",
+}
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -16,6 +45,10 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     result = QUERIES[name](spark, sf_dir)
     oracle = duck.sql(ORACLES[name])
     assert_df_equal(result, oracle)
+    listed = name in BRUTE_FORCE_JOINS
+    assert (assert_plan_scales(result) > 0) == listed, (
+        "stale BRUTE_FORCE_JOINS entry" if listed else "data-sided nested-loop join"
+    )
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

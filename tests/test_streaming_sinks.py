@@ -4,11 +4,14 @@ the checkpointed file sink and the epoch-keyed foreachBatch sink)."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import tempfile
 
 import pytest
 
 from lithops_dataframe_spark.catalog import normalize_events_ts
+from lithops_dataframe_spark.plans import QUERIES
 from lithops_dataframe_spark.streaming import events as SE
 from lithops_dataframe_spark.streaming.sinks import (
     foreach_batch_epoch_sink,
@@ -110,3 +113,33 @@ def test_merge_sink_retry_is_idempotent(spark, tmp_path):
     assert got[1] == (9, 999), "later epoch did not replace the key"
     assert got[0] == (5, 100) and got[4] == (2, 20), "untouched keys lost"
     assert got[5] == (1, 10)
+
+
+#: registered builders that stage a replay and drive a real stream to
+#: completion while building their frame
+REPLAY_BUILDERS = (
+    "stream_counter_agg",
+    "stream_incremental_dedup",
+    "stream_incremental_reservoir",
+    "stream_ks_drift",
+    "stream_merge_upsert_sink",
+    "stream_stateful_running_totals",
+)
+
+
+@pytest.mark.parametrize("name", REPLAY_BUILDERS)
+def test_replay_builder_leaves_nothing_behind(spark, sf_dir, name):
+    """A replay builder returns a frame that no longer needs its staging:
+    no work dir, sink view or running stream outlives the call."""
+
+    def state():
+        work = {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("lds_")}
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return work, views
+
+    work, views = state()
+    QUERIES[name](spark, sf_dir)
+    new_work, new_views = state()
+    assert new_work <= work, f"work dirs left behind: {sorted(new_work - work)}"
+    assert new_views <= views, f"temp views left behind: {sorted(new_views - views)}"
+    assert not spark.streams.active

@@ -3,15 +3,15 @@ while merely CONSTRUCTING their result DataFrame (training loops that
 collect model state, streaming queries that drive a real stream to
 completion, io queries that write fixture tables first).
 
-The plan audit's ``--lazy-all`` mode skips exactly these (auditing their
-final frame's plan would mostly print a LocalTableScan / memory-sink scan
-anyway, and paying a training loop per audit is wasted battery time).
-This tool keeps that skip-list HONEST: it builds every registered query
-at sf0.001 and reports the job-count delta attributable to construction.
+``bench.py`` times exactly these (``tools/eager_builders.txt``) with a
+phase-local warmup and a best-of-4: their construction job cascades pick
+up session-phase noise that the lazy rows' best-of-2 cannot remove. This
+tool keeps that list HONEST: it builds every registered query at sf0.001
+and reports the job-count delta attributable to construction.
 
     python tools/detect_eager.py          # print name -> jobs for eager ones
 
-``tests/test_explain_audit_cover.py`` re-runs the same detection so a new
+``tests/test_eager_builders.py`` re-runs the same detection so a new
 eager builder can't silently land outside the documented list (and a
 builder that becomes lazy gets removed from it).
 """
