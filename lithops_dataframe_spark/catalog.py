@@ -7,13 +7,13 @@ lineitem events documents embeddings — one parquet each under an
 Scale notes: parquet scans get column pruning + predicate pushdown from
 Catalyst for free; loaders never collect or cache data eagerly.
 
-Schema cache: Spark infers a parquet file's schema with its own job on
-every ``spark.read.parquet``. ``load_table`` infers each table once and
-builds later readers with ``spark.read.schema(cached)``, so a warm load
-launches no job. Each call still returns a NEW relation (fresh attribute
-ids), so self-joins stay well-formed. The key is the absolute path, the
+Relation cache: every ``spark.read.parquet`` resolves the data source
+and infers the file's schema with its own job. ``load_table`` does that
+once per session and then returns a new instance of the resolved
+relation: no job, fresh attribute ids (self-joins stay well-formed) and
+the plan node an uncached read gives. The key is the absolute path, the
 file's ``st_mtime_ns`` and ``st_size`` (a file rewritten in place is
-re-inferred) and the session's schema-affecting parquet confs
+resolved again) and the session's schema-affecting parquet confs
 (``_SCHEMA_CONFS``). A path that is not a local regular file — a remote
 URI such as ``s3a://`` or a directory of part files, whose mtime misses
 in-place rewrites — is read without the cache. At 100 TB the
@@ -27,9 +27,9 @@ from __future__ import annotations
 
 import os
 import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -59,9 +59,10 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
 
-# (abs path, st_mtime_ns, st_size, conf values) -> inferred schema. Two
-# foreachBatch threads racing on one key cost at most a duplicate inference.
-SCHEMA_CACHE: dict[tuple, StructType] = {}
+# session -> {(abs path, st_mtime_ns, st_size, conf values) -> the
+# resolved relation's JVM plan}. Two foreachBatch threads racing on one
+# key cost at most a duplicate resolution.
+RELATIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -77,12 +78,16 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
     confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size, confs)
-    schema = SCHEMA_CACHE.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    SCHEMA_CACHE[key] = df.schema
-    return df
+    plans = RELATIONS.setdefault(spark, {})
+    plan = plans.get(key)
+    if plan is None:
+        df = spark.read.parquet(path)
+        plans[key] = df._jdf.queryExecution().analyzed()
+        return df
+    # a renaming projection (``toDF``) would also give fresh ids, but it
+    # changes plans: it cost join_asof_nearest_mark a reused exchange
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan.newInstance())
+    return DataFrame(jdf, spark)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

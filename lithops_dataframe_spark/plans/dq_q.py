@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.functions import text as TX
 from lithops_dataframe_spark.operators.util import values_frame
@@ -691,8 +692,6 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the reference is a pinned sample table and the per-epoch
     cost is O(reference + batch) — the firehose is never re-scanned."""
     import os as _os
-    import shutil
-    import tempfile
 
     from lithops_dataframe_spark.streaming.drift import foreach_batch_ks_drift
     from lithops_dataframe_spark.streaming.events import read_events_stream
@@ -728,43 +727,44 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(event_id * 3) div {int(mx) + 1}").alias("b"),
     )
 
-    work = tempfile.mkdtemp(prefix="lds_stream_ks_")
-    try:
-        ref_path = _os.path.join(work, "ref")
-        ref.write.mode("overwrite").parquet(ref_path)
-        replay = _os.path.join(work, "replay")
-        stage_microbatches(strm_src.select("event_type", "v", "b"), F.col("b"), 3, replay)
-        stream = read_events_stream(spark, replay + "/*.parquet", "event_type string, v double")
-        decisions = _os.path.join(work, "decisions")
-        q = foreach_batch_ks_drift(
-            stream,
-            ref_path,
-            decisions,
-            _os.path.join(work, "_ckpt"),
-            group_col="event_type",
-            value_col="v",
+    work = cache.scratch("stream_ks")
+    ref_path = _os.path.join(work, "ref")
+    ref.write.mode("overwrite").parquet(ref_path)
+    replay = _os.path.join(work, "replay")
+    stage_microbatches(strm_src.select("event_type", "v", "b"), F.col("b"), 3, replay)
+    stream = read_events_stream(spark, replay + "/*.parquet", "event_type string, v double")
+    decisions = _os.path.join(work, "decisions")
+    q = foreach_batch_ks_drift(
+        stream,
+        ref_path,
+        decisions,
+        _os.path.join(work, "_ckpt"),
+        group_col="event_type",
+        value_col="v",
+    )
+    await_or_raise(q, 300, "stream_ks_drift")
+    # read back with the schema the step wrote: no inference job
+    rows = (
+        spark.read.schema(
+            "event_type string, n_a long, n_b long, ks_num long, ks_micros long, epoch int"
         )
-        await_or_raise(q, 300, "stream_ks_drift")
-        rows = (
-            spark.read.parquet(decisions)
-            .select(
-                F.col("epoch").cast("long").alias("batch_no"),
-                "event_type",
-                "n_a",
-                "n_b",
-                "ks_num",
-                "ks_micros",
-            )
-            .collect()
+        .parquet(decisions)
+        .select(
+            F.col("epoch").cast("long").alias("batch_no"),
+            "event_type",
+            "n_a",
+            "n_b",
+            "ks_num",
+            "ks_micros",
         )
-        return values_frame(
-            spark,
-            rows,
-            "batch_no long, event_type string, n_a long, n_b long,"
-            " ks_num long, ks_micros long",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .collect()
+    )
+    return values_frame(
+        spark,
+        rows,
+        "batch_no long, event_type string, n_a long, n_b long,"
+        " ks_num long, ks_micros long",
+    )
 
 
 # --- inter-rater agreement: Cohen's kappa + Krippendorff's alpha (r10) ---

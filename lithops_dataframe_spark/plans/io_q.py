@@ -13,19 +13,15 @@ handling, type mapping, partition layout) breaks the value hash.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.plans.registry import register
 from lithops_dataframe_spark.sources.csv import read_csv
 from lithops_dataframe_spark.sources.io import read_json, read_orc, read_parquet, write
-
-
-def _scratch(name: str) -> str:
-    return tempfile.mkdtemp(prefix=f"lds_{name}_")
 
 
 @register(
@@ -92,7 +88,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the two separator chars
         F.translate(F.format_number(F.col("p_retailprice"), 2), ".,", ",.").alias("p_euprice"),
     )
-    out = os.path.join(_scratch("csv"), "part_csv")
+    out = os.path.join(cache.scratch("csv"), "part_csv")
     write(src, out, fmt="csv", header="true")
     back = read_csv(
         spark,
@@ -135,7 +131,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("n_nationkey")
         .toPandas()
     )
-    sp = os.path.join(_scratch("csvskip"), "nation_preamble.csv")
+    sp = os.path.join(cache.scratch("csvskip"), "nation_preamble.csv")
     with open(sp, "w") as f:
         f.write("# legacy export, do not parse\ngenerated: long ago\n")
         f.write("n_nationkey,n_name\n")
@@ -188,7 +184,7 @@ def io_sinks_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") <= 1000)
         .select("l_orderkey", "l_quantity")
     )
-    base = _scratch("sinks")
+    base = cache.scratch("sinks")
 
     jpath = os.path.join(base, "orders_json")
     write(o, jpath, fmt="json")
@@ -251,7 +247,7 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical). Column pruning and predicate pushdown still apply to the
     merged scan."""
     orders = load_table(spark, sf_dir, "orders")
-    root = _scratch("evolve")
+    root = cache.scratch("evolve")
     orders.filter(F.col("o_orderkey") % 2 == 0).select("o_orderstatus", "o_orderkey").write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "gen=1"))
@@ -292,11 +288,11 @@ def io_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
     orders = load_table(spark, sf_dir, "orders")
-    frag_dir = os.path.join(_scratch("frag"), "orders_frag")
+    frag_dir = os.path.join(cache.scratch("frag"), "orders_frag")
     orders.repartition(64).write.mode("overwrite").parquet(frag_dir)
     n_frag = len(glob.glob(os.path.join(frag_dir, "*.parquet")))
 
-    compact_dir = os.path.join(_scratch("compact"), "orders_compact")
+    compact_dir = os.path.join(cache.scratch("compact"), "orders_compact")
     spark.read.parquet(frag_dir).repartition(4).write.mode("overwrite").parquet(compact_dir)
     n_compact = len(glob.glob(os.path.join(compact_dir, "*.parquet")))
     if n_compact >= n_frag:
@@ -352,7 +348,7 @@ def io_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
-    out = _scratch("zorder")
+    out = cache.scratch("zorder")
     write_zordered(li, "l_partkey", "l_suppkey", out, n_files=8)
     back = read_parquet(spark, out).filter(
         F.col("l_partkey").between(*_Z_PK) & F.col("l_suppkey").between(*_Z_SK)
@@ -396,11 +392,11 @@ def io_optimize_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
-    frag_dir = os.path.join(_scratch("optfrag"), "li_frag")
+    frag_dir = os.path.join(cache.scratch("optfrag"), "li_frag")
     li.repartition(48).write.mode("overwrite").parquet(frag_dir)
     n_frag = len(glob.glob(os.path.join(frag_dir, "*.parquet")))
 
-    opt_dir = os.path.join(_scratch("optimized"), "li_zorder")
+    opt_dir = os.path.join(cache.scratch("optimized"), "li_zorder")
     write_zordered(
         spark.read.parquet(frag_dir), "l_partkey", "l_suppkey", opt_dir, n_files=8
     )
@@ -487,7 +483,7 @@ def io_merge_upsert_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.lit("base").alias("src"),
     )
-    path = os.path.join(_scratch("merge"), "orders_by_month")
+    path = os.path.join(cache.scratch("merge"), "orders_by_month")
     # repartition on the partition column first: otherwise every write
     # task fans out a file into every month directory (tasks × months
     # small files — the anti-pattern io_compact_small_files exists to
@@ -566,7 +562,7 @@ def dpp_frames(spark: SparkSession, sf_dir: str):
         F.date_format("o_orderdate", "yyyy-MM").alias("m"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    fpath = os.path.join(_scratch("dpp"), "orders_by_month")
+    fpath = os.path.join(cache.scratch("dpp"), "orders_by_month")
     fact.repartition("m").write.partitionBy("m").mode("overwrite").parquet(fpath)
 
     dim = fact.select("m").distinct().select(
@@ -577,7 +573,7 @@ def dpp_frames(spark: SparkSession, sf_dir: str):
             ((F.substring("m", 6, 2).cast("int") + 2) / 3).cast("int").cast("string"),
         ).alias("q"),
     )
-    dpath = os.path.join(_scratch("dpp"), "month_dim")
+    dpath = os.path.join(cache.scratch("dpp"), "month_dim")
     dim.write.mode("overwrite").parquet(dpath)
 
     f = spark.read.parquet(fpath)
@@ -671,7 +667,7 @@ def io_csv_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(","), F.col("n_regionkey").cast("string"),
         )
     )
-    path = os.path.join(_scratch("corrupt"), "nation_malformed_csv")
+    path = os.path.join(cache.scratch("corrupt"), "nation_malformed_csv")
     nation.select(line.alias("value")).write.mode("overwrite").text(path)
 
     schema = T.StructType(

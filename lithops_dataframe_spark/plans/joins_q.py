@@ -11,6 +11,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.operators.joins import asof_join, interval_overlap_join, range_join
 from lithops_dataframe_spark.operators.util import values_frame
@@ -267,7 +268,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-memory catalog across sessions, so a fixed name + overwrite fails
     # with LOCATION_ALREADY_EXISTS in any later session
     suffix = uuid.uuid4().hex[:8]
-    lt, ot = f"lds_li_bucketed_{suffix}", f"lds_o_bucketed_{suffix}"
+    lt = cache.table(spark, f"lds_li_bucketed_{suffix}")
+    ot = cache.table(spark, f"lds_o_bucketed_{suffix}")
     li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").mode("overwrite").saveAsTable(lt)
     o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").mode("overwrite").saveAsTable(ot)
     lb, ob = spark.table(lt), spark.table(ot)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.operators import multimodal as M
 from lithops_dataframe_spark.operators.util import values_frame
@@ -134,14 +135,12 @@ def mm_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently vanish between writer and reader. Empty assets stay
     metadata-only rows in the media table; the explicit filter makes the
     contract visible instead of fixture-dependent."""
-    import tempfile
-
     media = M.media_table(
         load_table(spark, sf_dir, "documents").filter(
             (F.col("doc_id") < 300) & (F.length("text") > 0)
         )
     )
-    out = tempfile.mkdtemp(prefix="lds_binfiles_")
+    out = cache.scratch("binfiles")
     M.write_payload_files(media, out)
     files = M.read_binary_files(spark, out, pattern="*.bin")
     return files.select(

@@ -3,11 +3,10 @@ extension point proven under the value-hash gate."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.operators import multimodal as M
 from lithops_dataframe_spark.plans.registry import register
@@ -118,7 +117,7 @@ def stream_pyds_counter_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = stream.groupBy("user").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("amount"), 4).alias("sum_amount")
     )
-    sink = "lds_pyds_stream_" + uuid.uuid4().hex[:8]
+    sink = cache.temp_view(spark, "lds_pyds_stream_" + uuid.uuid4().hex[:8])
     q = (
         totals.writeStream.format("memory")
         .queryName(sink)
@@ -160,7 +159,7 @@ def pyds_bindir_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = M.media_table(
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     )
-    out = tempfile.mkdtemp(prefix="lds_pyds_bin_")
+    out = cache.scratch("pyds_bin")
     M.write_payload_files(media, out)
     return (
         spark.read.format("lds_bindir")
@@ -184,7 +183,7 @@ def stream_pyds_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     register_sources(spark)
-    out = tempfile.mkdtemp(prefix="lds_jsonl_sink_")
+    out = cache.scratch("jsonl_sink")
     stream = (
         spark.readStream.format("lds_counter_stream")
         .option("n_total", _N_STREAM)

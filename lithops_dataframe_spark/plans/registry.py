@@ -50,10 +50,10 @@ def _wrap_events_oracle(sql: str) -> str:
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query builder and its oracle SQL under ``name``.
 
-    Each builder is wrapped to evict the PREVIOUS builder's tracked
-    persists on entry (see :mod:`lithops_dataframe_spark.cache`), so a
-    sequential many-query sweep never accumulates cached blocks beyond
-    one query's working set.
+    Each builder is wrapped to release the PREVIOUS builder's tracked
+    persists, scratch dirs, temp views and tables on entry (see
+    :mod:`lithops_dataframe_spark.cache`), so a sequential many-query
+    sweep never accumulates them beyond one query's working set.
     """
     import functools
 

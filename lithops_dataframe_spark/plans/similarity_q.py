@@ -324,7 +324,10 @@ _SEMDEDUP_ORACLE = f"""
         FROM buckets a
         JOIN buckets b ON a.table_idx = b.table_idx AND a.bucket = b.bucket AND a.id < b.id
     ),
-    pairs AS (
+    -- MATERIALIZED: edges reads pairs twice and the recursive reach
+    -- re-reads edges every round; inlined, each read re-ran the bucket
+    -- self-join and cosine scoring
+    pairs AS MATERIALIZED (
         SELECT id_a, id_b FROM cand WHERE {_cos_sql('emb_a', 'emb_b')} >= {_NEARDUP_T}
     ),
     edges AS (SELECT id_a AS src, id_b AS dst FROM pairs

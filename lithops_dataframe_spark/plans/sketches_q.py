@@ -383,13 +383,12 @@ def rollup_sketch_hll_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 8% + 5 of the exact distinct counts (recomputed from raw for
     the gate; the oracle replays them and pins est_ok TRUE)."""
     import os
-    import tempfile
 
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"
     ).agg(F.hll_sketch_agg("user_id").alias("sk"))
-    path = os.path.join(tempfile.mkdtemp(prefix="lds_skrollup_"), "daily_hll")
+    path = os.path.join(cache.scratch("skrollup"), "daily_hll")
     daily.write.mode("overwrite").parquet(path)
 
     lo, hi = F.lit("2024-01-05").cast("timestamp"), F.lit("2024-01-21").cast("timestamp")

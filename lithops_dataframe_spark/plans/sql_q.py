@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import register_views
 from lithops_dataframe_spark.plans.registry import register
 
@@ -48,7 +49,8 @@ _CTE_WINDOW = """
 
 
 def _sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    for name in register_views(spark, sf_dir):
+        cache.temp_view(spark, name)
     return spark.sql(stmt)
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.operators.util import values_frame
 from lithops_dataframe_spark.streaming import events as SE
@@ -146,64 +147,42 @@ def stream_merge_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key rows; untouched partitions are never rewritten; a retried
     epoch re-applies idempotently — Delta-MERGE semantics on plain
     parquet, per-epoch cost O(touched partitions). The read-back table
-    must hash-match the oracle's last-batch-wins replay. It is collected
-    on the driver so the work dir can be removed before returning."""
+    must hash-match the oracle's last-batch-wins replay."""
     import os as _os
-    import shutil
-    import tempfile
-    import time as _time
 
     from lithops_dataframe_spark.streaming.sinks import (
         foreach_batch_merge_upsert_sink,
     )
+    from lithops_dataframe_spark.streaming.staging import stage_microbatches
 
     ev = _events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="lds_merge_sink_")
-    try:
-        replay = _os.path.join(work, "replay")
-        _os.makedirs(replay)
-        # stage the two ordered micro-batch files (file source processes
-        # oldest-mtime first; pin mtimes so the order is deterministic)
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(_os.path.join(replay, "b0"))
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(_os.path.join(replay, "b1"))
-        files = []
-        for sub in ("b0", "b1"):
-            d = _os.path.join(replay, sub)
-            part = [n for n in _os.listdir(d) if n.endswith(".parquet")][0]
-            dst = _os.path.join(replay, f"{sub}.parquet")
-            shutil.copy(_os.path.join(d, part), dst)
-            files.append(dst)
-            shutil.rmtree(d)
-        now = _time.time()
-        _os.utime(files[0], (now - 60, now - 60))
-        _os.utime(files[1], (now, now))
+    work = cache.scratch("merge_sink")
+    replay = _os.path.join(work, "replay")
+    # two ordered micro-batch files: even event_ids, then odd (ids whose
+    # remainder is neither, negative odd or NULL, are in no batch, as in
+    # the oracle)
+    stage_microbatches(ev, F.col("event_id") % 2, 2, replay)
 
-        target = _os.path.join(work, "target")
+    target = _os.path.join(work, "target")
 
-        def per_user(batch_df):
-            return batch_df.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
-            ).withColumn("part", F.col("user_id") % 8)
+    def per_user(batch_df):
+        return batch_df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
+        ).withColumn("part", F.col("user_id") % 8)
 
-        stream = SE.read_events_stream(spark, replay + "/*.parquet", ev.schema)
-        q = foreach_batch_merge_upsert_sink(
-            stream,
-            target,
-            _os.path.join(work, "_ckpt"),
-            transform=per_user,
-            key_col="user_id",
-            part_col="part",
-        )
-        await_or_raise(q, 300, "stream_merge_upsert_sink")
-        out = spark.read.parquet(target).select("user_id", "n_events", "cents")
-        return values_frame(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    stream = SE.read_events_stream(spark, replay + "/*.parquet", ev.schema)
+    q = foreach_batch_merge_upsert_sink(
+        stream,
+        target,
+        _os.path.join(work, "_ckpt"),
+        transform=per_user,
+        key_col="user_id",
+        part_col="part",
+    )
+    await_or_raise(q, 300, "stream_merge_upsert_sink")
+    out = spark.read.parquet(target).select("user_id", "n_events", "cents")
+    return values_frame(spark, out.collect(), out.schema)
 
 
 _ENRICHED_ORACLE = """
@@ -311,9 +290,7 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     per-user state genuinely carries ACROSS batches), run with an
     availableNow trigger into a memory sink, then reduced to the final
     per-user totals (update mode re-emits a user per batch; the row with
-    the max n_events is the last emission — counts only grow). The totals
-    are collected on the driver so the replay dir and the sink's temp
-    view are dropped before returning.
+    the max n_events is the last emission — counts only grow).
 
     The oracle is the batch aggregate over the doubled input — the
     incremental-stateful result must equal it exactly. This is the one
@@ -322,7 +299,6 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     """
     import os
     import shutil
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -330,40 +306,36 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
 
     from lithops_dataframe_spark.catalog import normalize_events_ts, table_path
 
-    replay = tempfile.mkdtemp(prefix="lds_stateful_replay_")
-    sink = "lds_stateful_" + uuid.uuid4().hex[:8]
-    try:
-        src = table_path(sf_dir, "events")
-        shutil.copy(src, os.path.join(replay, "part-0000.parquet"))
-        shutil.copy(src, os.path.join(replay, "part-0001.parquet"))
+    replay = cache.scratch("stateful_replay")
+    sink = cache.temp_view(spark, "lds_stateful_" + uuid.uuid4().hex[:8])
+    src = table_path(sf_dir, "events")
+    shutil.copy(src, os.path.join(replay, "part-0000.parquet"))
+    shutil.copy(src, os.path.join(replay, "part-0001.parquet"))
 
-        # batch read only to capture the raw schema for the stream reader
-        # (events carries TIMESTAMP(NANOS) — same session-proofing as load_table)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw_schema = spark.read.parquet(replay).schema
-        stream_in = normalize_events_ts(SE.read_events_stream(spark, replay, raw_schema))
-        totals = SE.user_running_totals(stream_in)
+    # batch read only to capture the raw schema for the stream reader
+    # (events carries TIMESTAMP(NANOS) — same session-proofing as load_table)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw_schema = spark.read.parquet(replay).schema
+    stream_in = normalize_events_ts(SE.read_events_stream(spark, replay, raw_schema))
+    totals = SE.user_running_totals(stream_in)
 
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300, "stream_stateful_running_totals")
+    q = (
+        totals.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_or_raise(q, 300, "stream_stateful_running_totals")
 
-        emitted = spark.table(sink)
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        out = (
-            emitted.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("user_id", "n_events", "sum_value")
-        )
-        return values_frame(spark, out.collect(), out.schema)
-    finally:
-        spark.catalog.dropTempView(sink)
-        shutil.rmtree(replay, ignore_errors=True)
+    emitted = spark.table(sink)
+    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    out = (
+        emitted.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("user_id", "n_events", "sum_value")
+    )
+    return values_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -405,12 +377,8 @@ def stream_counter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain batch LAG query over the whole table: the
     incremental result must equal it exactly (single-event users, which
     the batch query reports as NULL-sum rows, are filtered on both
-    sides). As in stream_stateful_running_totals, the result is collected
-    so the replay dir and the sink's temp view are dropped before
-    returning."""
+    sides)."""
     import os
-    import shutil
-    import tempfile
     import uuid
 
     import duckdb
@@ -419,46 +387,42 @@ def stream_counter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lithops_dataframe_spark.catalog import normalize_events_ts, table_path
 
-    replay = tempfile.mkdtemp(prefix="lds_counter_replay_")
-    sink = "lds_counter_" + uuid.uuid4().hex[:8]
-    try:
-        src = table_path(sf_dir, "events")
-        con = duckdb.connect()
-        t_ns = con.sql(
-            f"SELECT epoch_ns(quantile_disc(ts, 0.5)) FROM read_parquet('{src}')"
-        ).fetchone()[0]
-        for i, cond in enumerate((f"epoch_ns(ts) < {t_ns}", f"epoch_ns(ts) >= {t_ns}")):
-            con.execute(
-                f"COPY (SELECT * FROM read_parquet('{src}') WHERE {cond}) "
-                f"TO '{os.path.join(replay, f'part-000{i}.parquet')}' (FORMAT PARQUET)"
-            )
-        con.close()
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw_schema = spark.read.parquet(replay).schema
-        stream_in = normalize_events_ts(SE.read_events_stream(spark, replay, raw_schema))
-        agg = SE.user_counter_agg(stream_in)
-
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    replay = cache.scratch("counter_replay")
+    sink = cache.temp_view(spark, "lds_counter_" + uuid.uuid4().hex[:8])
+    src = table_path(sf_dir, "events")
+    con = duckdb.connect()
+    t_ns = con.sql(
+        f"SELECT epoch_ns(quantile_disc(ts, 0.5)) FROM read_parquet('{src}')"
+    ).fetchone()[0]
+    for i, cond in enumerate((f"epoch_ns(ts) < {t_ns}", f"epoch_ns(ts) >= {t_ns}")):
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{src}') WHERE {cond}) "
+            f"TO '{os.path.join(replay, f'part-000{i}.parquet')}' (FORMAT PARQUET)"
         )
-        await_or_raise(q, 300, "stream_counter_agg")
+    con.close()
 
-        emitted = spark.table(sink)
-        w = Window.partitionBy("user_id").orderBy(F.col("n_deltas").desc())
-        out = (
-            emitted.withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & (F.col("n_deltas") >= 1))
-            .select("user_id", "n_deltas", "n_resets", "total_delta_cents")
-        )
-        return values_frame(spark, out.collect(), out.schema)
-    finally:
-        spark.catalog.dropTempView(sink)
-        shutil.rmtree(replay, ignore_errors=True)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw_schema = spark.read.parquet(replay).schema
+    stream_in = normalize_events_ts(SE.read_events_stream(spark, replay, raw_schema))
+    agg = SE.user_counter_agg(stream_in)
+
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_or_raise(q, 300, "stream_counter_agg")
+
+    emitted = spark.table(sink)
+    w = Window.partitionBy("user_id").orderBy(F.col("n_deltas").desc())
+    out = (
+        emitted.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & (F.col("n_deltas") >= 1))
+        .select("user_id", "n_deltas", "n_resets", "total_delta_cents")
+    )
+    return values_frame(spark, out.collect(), out.schema)
 
 
 _TOPK_HH_ORACLE = """

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.functions import hashing as H
 from lithops_dataframe_spark.functions import text as T
@@ -66,7 +67,7 @@ def udtf_long_token_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield i, tok
 
     spark.udtf.register("long_tokens", LongTokens)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView(cache.temp_view(spark, "docs_udtf"))
     return spark.sql(
         """
         SELECT t.token,
@@ -961,11 +962,10 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     total: the 100 TB firehose never accumulates."""
     import os as _os
     import re as _re
-    import shutil
-    import tempfile
 
     from lithops_dataframe_spark.streaming.events import read_events_stream
     from lithops_dataframe_spark.streaming.reservoir import (
+        _state_schema,
         foreach_batch_reservoir,
     )
     from lithops_dataframe_spark.streaming.staging import (
@@ -986,36 +986,35 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     batch_expr = clamped_batch_expr(int(mx), 3)
 
-    work = tempfile.mkdtemp(prefix="lds_stream_res_")
-    try:
-        replay = _os.path.join(work, "replay")
-        stage_microbatches(docs, batch_expr, 3, replay)
-        stream = read_events_stream(spark, replay + "/*.parquet", docs.schema)
-        state_dir = _os.path.join(work, "state")
-        q = foreach_batch_reservoir(
-            stream,
-            state_dir,
-            _os.path.join(work, "_ckpt"),
-            weight_col="n_chars",
-            id_col="doc_id",
-            k=_RES_K,
-            extra={"source": "StringType"},
+    work = cache.scratch("stream_res")
+    replay = _os.path.join(work, "replay")
+    stage_microbatches(docs, batch_expr, 3, replay)
+    stream = read_events_stream(spark, replay + "/*.parquet", docs.schema)
+    state_dir = _os.path.join(work, "state")
+    extra = {"source": "StringType"}
+    q = foreach_batch_reservoir(
+        stream,
+        state_dir,
+        _os.path.join(work, "_ckpt"),
+        weight_col="n_chars",
+        id_col="doc_id",
+        k=_RES_K,
+        extra=extra,
+    )
+    await_or_raise(q, 300, "stream_incremental_reservoir")
+    last = max(
+        int(m.group(1))
+        for d in _os.listdir(state_dir)
+        if (m := _re.fullmatch(r"epoch=(\d+)", d))
+    )
+    rows = (
+        spark.read.schema(_state_schema(extra))
+        .parquet(_os.path.join(state_dir, f"epoch={last}"))
+        .select(
+            F.col("id").alias("doc_id"), "source", "w", "res_key"
         )
-        await_or_raise(q, 300, "stream_incremental_reservoir")
-        last = max(
-            int(m.group(1))
-            for d in _os.listdir(state_dir)
-            if (m := _re.fullmatch(r"epoch=(\d+)", d))
-        )
-        rows = (
-            spark.read.parquet(_os.path.join(state_dir, f"epoch={last}"))
-            .select(
-                F.col("id").alias("doc_id"), "source", "w", "res_key"
-            )
-            .collect()
-        )
-        return values_frame(
-            spark, rows, "doc_id long, source string, w long, res_key double"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .collect()
+    )
+    return values_frame(
+        spark, rows, "doc_id long, source string, w long, res_key double"
+    )

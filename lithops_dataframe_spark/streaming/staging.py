@@ -1,6 +1,6 @@
 """Micro-batch replay staging shared by the streaming gate queries
 (stream_incremental_dedup, stream_incremental_reservoir,
-stream_ks_drift): split a batch frame into N ascending-key parquet
+stream_ks_drift, stream_merge_upsert_sink): split a batch frame into N ascending-key parquet
 files whose mtimes force Structured Streaming's file source
 (maxFilesPerTrigger=1 + availableNow) to replay them as N ordered
 micro-batch epochs.

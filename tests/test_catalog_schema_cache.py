@@ -1,4 +1,4 @@
-"""The catalog's parquet schema cache: a warm ``load_table`` launches no
+"""The catalog's relation cache: a warm ``load_table`` launches no
 schema-inference job, returns the schema an uncached read infers, sees a
 file rewritten in place, keys on the schema-affecting confs, and still
 returns a fresh relation per call (self-joins stay well-formed)."""
@@ -10,15 +10,15 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from lithops_dataframe_spark.catalog import SCHEMA_CACHE, TABLES, load_table, normalize_events_ts, table_path
+from lithops_dataframe_spark.catalog import RELATIONS, TABLES, load_table, normalize_events_ts, table_path
 
 
 def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-def _keys_for(path: str) -> list[tuple]:
-    return [k for k in SCHEMA_CACHE if k[0] == os.path.abspath(path)]
+def _keys_for(spark, path: str) -> list[tuple]:
+    return [k for k in RELATIONS[spark] if k[0] == os.path.abspath(path)]
 
 
 def test_warm_load_launches_no_job(spark, sf_dir):
@@ -76,7 +76,7 @@ def test_nanos_conf_gets_own_entry(spark, tmp_path):
             before = _next_job_id(spark)
             load_table(spark, str(tmp_path), "t")
             assert _next_job_id(spark) > before, f"{conf}={value} reused another entry"
-        assert sorted(k[3][0] for k in _keys_for(path)) == ["false", "true"]
+        assert sorted(k[3][0] for k in _keys_for(spark, path)) == ["false", "true"]
     finally:
         if old is None:
             spark.conf.unset(conf)

@@ -4,8 +4,6 @@ per-file min/max on both dimensions) but none of a hash-shuffled one."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from lithops_dataframe_spark.operators.layout import write_zordered, zorder_value
@@ -37,15 +35,14 @@ def _file_stats(spark, path):
     )
 
 
-def test_zorder_layout_enables_file_pruning(spark):
+def test_zorder_layout_enables_file_pruning(spark, tmp_path):
     n = 200_000
     data = spark.range(n).select(
         (F.col("id") % 1000).cast("int").alias("x"),
         ((F.col("id") * 7) % 1000).cast("int").alias("y"),
         F.col("id").alias("value"),
     )
-    z_dir = tempfile.mkdtemp(prefix="lds_ztest_")
-    s_dir = tempfile.mkdtemp(prefix="lds_stest_")
+    z_dir, s_dir = str(tmp_path / "z"), str(tmp_path / "s")
     write_zordered(data, "x", "y", z_dir, bits=10, n_files=16)
     data.repartition(16).write.mode("overwrite").parquet(s_dir)
 

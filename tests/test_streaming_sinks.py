@@ -10,6 +10,7 @@ import tempfile
 
 import pytest
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import normalize_events_ts
 from lithops_dataframe_spark.plans import QUERIES
 from lithops_dataframe_spark.streaming import events as SE
@@ -129,17 +130,23 @@ REPLAY_BUILDERS = (
 
 @pytest.mark.parametrize("name", REPLAY_BUILDERS)
 def test_replay_builder_leaves_nothing_behind(spark, sf_dir, name):
-    """A replay builder returns a frame that no longer needs its staging:
-    no work dir, sink view or running stream outlives the call."""
+    """A replay builder stops its stream before it returns; its staging
+    (work dir, sink view) stays readable until the next release, and
+    :func:`cache.release_all` then removes every piece of it."""
 
     def state():
         work = {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("lds_")}
         views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
         return work, views
 
+    cache.release_all()
     work, views = state()
-    QUERIES[name](spark, sf_dir)
+    streams = {q.id for q in spark.streams.active}
+    df = QUERIES[name](spark, sf_dir)
+    left = {q.id for q in spark.streams.active} - streams
+    assert not left, f"streams still running after return: {sorted(left)}"
+    df.collect()  # the frame reads its staging, which must still be there
+    cache.release_all()
     new_work, new_views = state()
     assert new_work <= work, f"work dirs left behind: {sorted(new_work - work)}"
     assert new_views <= views, f"temp views left behind: {sorted(new_views - views)}"
-    assert not spark.streams.active

@@ -36,11 +36,11 @@ def builder_job_counts(spark, sf_dir: str) -> dict[str, int]:
     builder with MORE jobs than reads (training collects, sink writes,
     a stream driven to completion) is eager. A read that launches no job
     (explicit schema) can only under-count — never false-flags. The
-    catalog's parquet schema cache is cleared before each build so that
+    catalog's relation cache is cleared before each build so that
     its table reads again cost their one inference job each."""
     from pyspark.sql.readwriter import DataFrameReader
 
-    from lithops_dataframe_spark.catalog import SCHEMA_CACHE
+    from lithops_dataframe_spark.catalog import RELATIONS
     from lithops_dataframe_spark.plans import QUERIES
 
     sc = spark.sparkContext
@@ -68,7 +68,7 @@ def builder_job_counts(spark, sf_dir: str) -> dict[str, int]:
     out: dict[str, int] = {}
     try:
         for name in sorted(QUERIES):
-            SCHEMA_CACHE.clear()
+            RELATIONS.clear()
             before_jobs, before_reads = job_counter(), reads["n"]
             try:
                 QUERIES[name](spark, sf_dir)
