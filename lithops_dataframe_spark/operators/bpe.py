@@ -3,32 +3,26 @@
 Upgrades the single merge-step pair count (``bpe_top_pairs``, round 3) to
 the real TRAINING LOOP: per iteration, count adjacent symbol pairs over
 the word-frequency table, adopt the most frequent pair as a merge rule,
-and apply it corpus-wide with BPE's greedy left-to-right semantics —
-exactly the algorithm of Sennrich et al.'s subword-NMT trainer, expressed
-relationally.
+and apply it to every word with BPE's greedy left-to-right semantics —
+the algorithm of Sennrich et al.'s subword-NMT trainer.
 
-Scale design: training runs on the DISTINCT-WORD frequency table, not the
-raw corpus — after the initial word count (one shuffle over the corpus),
-every iteration's cost is proportional to the vocabulary (bounded, here
-top ``max_words``), independent of corpus size. Each iteration is two
-wid-partitioned window exchanges + one aggregate over (word, pos, sym)
-rows — all hash-partitioned on the word, no driver-side data paths except the single
-argmax row per iteration (the k-means-centroid pattern).
-
-Greedy left-to-right application: matches at consecutive positions
-overlap (they share a symbol), so within each maximal RUN of consecutive
-match positions only every other one merges — selected relationally as
-``row_number within run`` even (the run id is ``pos - row_number over
-pos``). This reproduces sequential non-overlapping replacement exactly
-(e.g. merging (A,A) in "A A A" yields "AA A"), and the same windowed SQL
-replays in DuckDB, so every learned rule is value-hash-verifiable.
+Scale design: the work splits into a data-sized reduction and a bounded
+combine. Spark runs the one corpus-sized pass, the word count, and keeps
+the top ``max_words`` words. The driver collects that vocabulary and runs
+the merge loop over it in plain Python: every iteration's input is the
+capped vocabulary by construction, independent of corpus size, so a
+100 TB corpus still pays one word count and the driver holds at most
+``max_words`` words (the ``pref_bradley_terry`` pattern).
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from lithops_dataframe_spark.operators.util import values_frame
 
 
 def word_frequency_table(
@@ -43,6 +37,19 @@ def word_frequency_table(
     return counts.orderBy(F.col("cnt").desc(), F.col("word").asc()).limit(max_words)
 
 
+def _merge(syms: list[str], s1: str, s2: str) -> list[str]:
+    """Replace non-overlapping (s1, s2) matches left to right."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == s1 and syms[i + 1] == s2:
+            out.append(s1 + s2)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
 def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
@@ -55,87 +62,42 @@ def bpe_train(
     (step, left_sym, right_sym, merged, pair_count).
 
     ``return_tokens=True`` additionally returns the post-merge token
-    table ``(wid, cnt, pos, sym)`` — the ENCODED vocabulary. Encoding a
-    corpus with a trained BPE is this table joined back to the corpus's
-    word occurrences: the merge loop runs once over the bounded
-    vocabulary, never over the corpus (same 100 TB argument as
-    training)."""
+    table ``(wid, cnt, pos, sym)`` with 1-based ``pos`` — the ENCODED
+    vocabulary. Encoding a corpus with a trained BPE is this table joined
+    back to the corpus's word occurrences: the merge loop runs once over
+    the bounded vocabulary, never over the corpus."""
     spark = docs.sparkSession
-    vocab = word_frequency_table(docs, text_col, max_words=max_words)
-    # initial symbols: the word's characters (split('') is fine here —
-    # words are short; the CDC O(p)-substring trap doesn't bite)
-    tok = vocab.select(
-        F.col("word").alias("wid"),
-        "cnt",
-        F.posexplode(F.split("word", "")).alias("pos0", "sym"),
-    ).select("wid", "cnt", (F.col("pos0") + 1).alias("pos"), "sym")
-    # checkpoint the initial token table ONCE: every iteration issues an
-    # action (the argmax collect), and without this barrier each one
-    # replays the corpus-wide word count upstream of it. LAZY checkpoint
-    # (r12): the first argmax collect materializes it anyway, so an eager
-    # checkpoint was a whole extra job per call for no reuse gain.
-    tok = tok.localCheckpoint(eager=False)
+    vocab = [
+        (r["word"], r["cnt"])
+        for r in word_frequency_table(docs, text_col, max_words=max_words).collect()
+    ]
+    words = {w: list(w) for w, _ in vocab}
 
     merges: list[tuple] = []
-    w_pos = Window.partitionBy("wid").orderBy("pos")
     for step in range(n_merges):
-        # one window pass attaches the successor symbol — the pair-count
-        # aggregate and the match flags both read it, so each iteration
-        # costs two wid-partitioned exchanges + one aggregate, no
-        # self-joins (the join formulation measured ~4x slower: five
-        # shuffles per round on a frame this shape is pure scheduling)
-        tok2 = tok.withColumn("nxt", F.lead("sym").over(w_pos))
-        top = (
-            tok2.filter(F.col("nxt").isNotNull())
-            .groupBy(F.col("sym").alias("s1"), F.col("nxt").alias("s2"))
-            .agg(F.sum("cnt").alias("c"))
-            .orderBy(F.col("c").desc(), F.col("s1").asc(), F.col("s2").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        pairs: Counter = Counter()
+        for w, cnt in vocab:
+            syms = words[w]
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += cnt
+        if not pairs:
             break
-        s1, s2, c = top[0]["s1"], top[0]["s2"], int(top[0]["c"])
+        # symbols are [a-z0-9]+, so Python's str order is Spark's binary
+        # order: ties break by left then right symbol ascending
+        (s1, s2), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((step, s1, s2, s1 + s2, c))
-
-        # greedy left-to-right selection via run parity, windows only:
-        # consecutive match positions overlap (they share a symbol), so
-        # within each maximal run of consecutive matches every other one
-        # merges. run id = pos - running-match-count; rank within
-        # (wid, run) gives the parity.
-        m = (F.col("sym") == s1) & (F.col("nxt") == s2)
-        flagged = tok2.withColumn("m", m.cast("int")).withColumn(
-            "run",
-            F.when(m, F.col("pos") - F.sum(F.col("m")).over(
-                w_pos.rowsBetween(Window.unboundedPreceding, 0)
-            )),
-        )
-        w_run = Window.partitionBy("wid", "run").orderBy("pos")
-        flagged = flagged.withColumn(
-            "keep", m & ((F.row_number().over(w_run) - 1) % 2 == 0)
-        ).withColumn("k_prev", F.lag("keep").over(w_pos))
-        tok = (
-            flagged.filter(~F.coalesce(F.col("k_prev"), F.lit(False)))
-            .select(
-                "wid",
-                "cnt",
-                F.row_number().over(w_pos).alias("pos"),
-                F.when(F.col("keep"), F.lit(s1 + s2)).otherwise(F.col("sym")).alias("sym"),
-            )
-        )
-        # per-iteration lineage truncation: the frame is ~16k rows, so the
-        # checkpoint is cheap, and it stops both plan growth AND the
-        # re-execution of prior rounds by the next argmax collect. Lazy:
-        # the NEXT round's argmax (or the caller's first action on the
-        # returned tokens) materializes it — one job per round, not two
-        # (r12, guide §1.2).
-        tok = tok.localCheckpoint(eager=False)
-
-    from lithops_dataframe_spark.operators.util import values_frame
+        for w, _ in vocab:
+            words[w] = _merge(words[w], s1, s2)
 
     merges_df = values_frame(
         spark, merges, "step int, left_sym string, right_sym string, merged string, pair_count bigint"
     )
-    if return_tokens:
-        return merges_df, tok
-    return merges_df
+    if not return_tokens:
+        return merges_df
+    # one literal row per word (not per token): the VALUES text and its
+    # parse stay vocabulary-sized; symbols never contain a space
+    rows = [(w, cnt, " ".join(words[w])) for w, cnt in vocab]
+    tok = values_frame(spark, rows, "wid string, cnt bigint, syms string").select(
+        "wid", "cnt", F.posexplode(F.split("syms", " ")).alias("pos0", "sym")
+    )
+    return merges_df, tok.select("wid", "cnt", (F.col("pos0") + 1).alias("pos"), "sym")

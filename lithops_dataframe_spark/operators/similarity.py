@@ -471,21 +471,16 @@ def ivf_topk(
         n_probe,
         "q_nrm",
     )
-    # Probe join: the query side is bounded by construction (queries ×
-    # n_probe rows) → broadcast it so the corpus-side assignment STREAMS
-    # through a BroadcastHashJoin with no exchange (guide §3.1 — r12's
-    # unhinted plan shuffled the corpus side). No dropDuplicates: each
-    # corpus row is assigned EXACTLY one cell (n=1 slice), so a
-    # (query, neighbor) pair can match on at most one cell_id — the r12
-    # dedup exchange was a provable no-op (guide §2.4: a distinct on data
-    # that is already unique).
-    cand = c_assigned.join(F.broadcast(q_assigned), "cell_id").filter(
+    # Probe join, unhinted: the query side is caller-sized (queries ×
+    # n_probe rows), so the planner and AQE choose the join from its
+    # measured size. No dropDuplicates: each corpus row is assigned
+    # EXACTLY one cell (n=1 slice), so a (query, neighbor) pair can match
+    # on at most one cell_id — a distinct here is a provable no-op
+    # (guide §2.4: a distinct on data that is already unique).
+    cand = c_assigned.join(q_assigned, "cell_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    # one fold per candidate (norms carried from assignment).
-    # Interleaved A/B vs the r12 shape (unhinted join + dropDuplicates +
-    # 3-fold cosine): median 1.068 vs 1.072 s at sf0.1 — flat locally,
-    # strictly better shaped at scale (plans/r13/ab_records.jsonl).
+    # one fold per candidate (norms carried from assignment)
     return _top_k(cand, k)
 
 

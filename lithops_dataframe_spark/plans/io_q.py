@@ -125,18 +125,13 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then header then the 25-row nation table (driver-written — bounded);
     # read_csv(skiprows=2) must skip the junk, take the header from line 2,
     # and driver-side-infer the schema
-    nat = (
-        load_table(spark, sf_dir, "nation")
-        .select("n_nationkey", "n_name")
-        .orderBy("n_nationkey")
-        .toPandas()
-    )
+    nat = sorted(load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name").collect())
     sp = os.path.join(cache.scratch("csvskip"), "nation_preamble.csv")
     with open(sp, "w") as f:
         f.write("# legacy export, do not parse\ngenerated: long ago\n")
         f.write("n_nationkey,n_name\n")
-        for r in nat.itertuples():
-            f.write(f"{r.n_nationkey},{r.n_name}\n")
+        for key, name in nat:
+            f.write(f"{key},{name}\n")
     skip_agg = read_csv(spark, sp, skiprows=2).agg(
         F.count(F.lit(1)).alias("n_nations"),
         F.sum("n_nationkey").alias("nation_key_sum"),

@@ -439,8 +439,9 @@ _BPE_MAX_WORDS = 2000
 def _bpe_oracle(n_merges: int, max_words: int) -> str:
     """Unrolled DuckDB replay of operators/bpe.py::bpe_train: the same
     word-frequency table, then per iteration the same pair-count argmax
-    (ties: count desc, pair asc) and the same run-parity greedy merge
-    application, expressed with identical windowed SQL."""
+    (ties: count desc, pair asc) and the same greedy left-to-right merge
+    application, expressed relationally (self-joins and run-parity
+    windows) — an independent check of the driver-side Python loop."""
     sql = _bpe_oracle_ctes(n_merges, max_words)
     finals = [
         f"SELECT {k} AS step, s1 AS left_sym, s2 AS right_sym, "
@@ -508,11 +509,11 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL BPE tokenizer training (upgrades r3's single-step
     bpe_top_pairs): six merge-learning iterations over the word-frequency
     table, each adopting the most frequent adjacent symbol pair and
-    applying it corpus-wide with greedy left-to-right semantics (see
-    operators/bpe.py for the run-parity relational formulation and the
-    100 TB cost argument: after the initial word count, every iteration's
-    cost depends on the vocabulary, not the corpus). Every learned rule
-    is hash-verified against a DuckDB replay of the identical algorithm."""
+    applying it to every word with greedy left-to-right semantics (see
+    operators/bpe.py for the 100 TB cost argument: Spark runs one word
+    count, and the merge loop runs on the driver over the capped
+    vocabulary, never the corpus). Every learned rule is hash-verified
+    against a DuckDB replay of the identical algorithm."""
     from lithops_dataframe_spark.operators.bpe import bpe_train
 
     docs = load_table(spark, sf_dir, "documents")

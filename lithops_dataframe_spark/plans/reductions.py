@@ -319,7 +319,9 @@ def red_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kurt_discount",
             "median_qty",
         )
-        .orderBy("l_returnflag")
+        # at most 3 return flags: one task sorts them, no range-partition sampling job
+        .coalesce(1)
+        .sortWithinPartitions("l_returnflag")
     )
 
 

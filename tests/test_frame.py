@@ -238,7 +238,7 @@ def test_observe_metrics_ride_the_query(spark):
 def test_bpe_train_matches_reference(spark):
     """bpe_train vs a straightforward sequential-Python BPE trainer on a
     corpus with overlapping runs ('aaaa') and count ties — rules, order,
-    and pair counts must match exactly."""
+    pair counts and the encoded token table must match exactly."""
     from lithops_dataframe_spark.operators.bpe import bpe_train
 
     texts = [
@@ -247,9 +247,10 @@ def test_bpe_train_matches_reference(spark):
         "na na na banana",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+    merges, tok = bpe_train(df, n_merges=5, return_tokens=True)
     got = [
         (r["step"], r["left_sym"], r["right_sym"], r["merged"], r["pair_count"])
-        for r in sorted(bpe_train(df, n_merges=5).collect(), key=lambda r: r["step"])
+        for r in sorted(merges.collect(), key=lambda r: r["step"])
     ]
 
     # reference: greedy sequential BPE over the word-frequency table
@@ -281,3 +282,8 @@ def test_bpe_train_matches_reference(spark):
                     i += 1
             vocab[w] = out
     assert got == exp
+    got_tok = sorted((r["wid"], r["cnt"], r["pos"], r["sym"]) for r in tok.collect())
+    exp_tok = sorted(
+        (w, words[w], pos, sym) for w, syms in vocab.items() for pos, sym in enumerate(syms, 1)
+    )
+    assert got_tok == exp_tok

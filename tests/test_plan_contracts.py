@@ -18,8 +18,9 @@ depends on, so a lost reuse or broadcast, or an added exchange, fails here:
 - ``text_hashed_tfidf`` reuses its (doc_id, bucket) term-frequency
   exchange for the idf side, so the corpus is tokenized once.
 - ``sim_cosine_topk_ivf`` and ``sim_cosine_topk_lsh`` probe the corpus
-  through a broadcast of the bounded query side, with no corpus-side
-  exchange.
+  through a broadcast of the small query side, with no corpus-side
+  exchange (IVF's broadcast is the planner's size-based choice, not a
+  hint).
 - The five TPC-H queries the benchmark's ``tpch-sf0.01`` workload runs.
 
 Every case starts from an empty cache: a frame another test left
