@@ -88,8 +88,8 @@ def query_names() -> list[str]:
 # 3 round-8 additions first (stateful streaming dedup, feature re-rank,
 # epoch scheduling), then the 2 r8 rotation leftovers and the 2 registry
 # ghosts. After this round's sweep every registered query has a hard
-# green driver row (tools/rotation_audit.py verifies from the committed
-# CORRECTNESS_r*.json evidence). Slots 28-50 backfill with 23
+# green driver row (the committed CORRECTNESS_r*.json files are the
+# evidence). Slots 28-50 backfill with 23
 # previously-gated queries chosen for family breadth — deliberately
 # restoring driver presence to the five families waived during the
 # r4-r8 rotations (sampling, object ingest, decontamination,

@@ -49,6 +49,12 @@ def duck(sf_dir):
     con.close()
 
 
+def next_job_id(spark) -> int:
+    """The id the next Spark job will get: the jobs launched between two
+    reads are their difference."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 def _norm_cell(v):
     if v is None:
         return None

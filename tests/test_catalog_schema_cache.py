@@ -12,9 +12,7 @@ import pyarrow.parquet as pq
 
 from lithops_dataframe_spark.catalog import RELATIONS, TABLES, load_table, normalize_events_ts, table_path
 
-
-def _next_job_id(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+from tests.conftest import next_job_id
 
 
 def _keys_for(spark, path: str) -> list[tuple]:
@@ -23,18 +21,18 @@ def _keys_for(spark, path: str) -> list[tuple]:
 
 def test_warm_load_launches_no_job(spark, sf_dir):
     load_table(spark, sf_dir, "orders")
-    before = _next_job_id(spark)
+    before = next_job_id(spark)
     df = load_table(spark, sf_dir, "orders")
-    assert _next_job_id(spark) == before
+    assert next_job_id(spark) == before
     assert "o_orderkey" in df.columns
 
 
 def test_cached_schema_matches_inferred(spark, sf_dir):
     for name in TABLES:
         load_table(spark, sf_dir, name)
-        before = _next_job_id(spark)
+        before = next_job_id(spark)
         cached = load_table(spark, sf_dir, name).schema
-        assert _next_job_id(spark) == before, name
+        assert next_job_id(spark) == before, name
         inferred = spark.read.parquet(table_path(sf_dir, name))
         if name == "events":
             inferred = normalize_events_ts(inferred)
@@ -73,9 +71,9 @@ def test_nanos_conf_gets_own_entry(spark, tmp_path):
     try:
         for value in ("false", "true"):
             spark.conf.set(conf, value)
-            before = _next_job_id(spark)
+            before = next_job_id(spark)
             load_table(spark, str(tmp_path), "t")
-            assert _next_job_id(spark) > before, f"{conf}={value} reused another entry"
+            assert next_job_id(spark) > before, f"{conf}={value} reused another entry"
         assert sorted(k[3][0] for k in _keys_for(spark, path)) == ["false", "true"]
     finally:
         if old is None:

@@ -11,8 +11,17 @@ data-sided ones allowed are the brute-force baselines below, each of which
 scores a bounded query set against one corpus scan. The list is exact: an
 entry whose query no longer plans a data-sided nested-loop join fails too.
 
+The same run also keeps ``tools/eager_builders.txt`` exact: a builder is
+eager if it launches any Spark job while building its frame, with the
+catalog warm (so a table read costs none). ``bench.py`` times exactly the
+listed builders best-of-4.
+
 Last, ``cache.release_all()`` must remove every ``lds_*`` temp dir, temp
 view, catalog table and active stream the builder left behind.
+
+The first 50 of ``ordered_queries()`` must also match their oracles under
+session confs that change partitioning and join strategy, in the style of
+spark-rapids' ``assert_gpu_and_cpu_are_equal_collect``.
 """
 
 from __future__ import annotations
@@ -22,10 +31,14 @@ import tempfile
 
 import pytest
 
-from lithops_dataframe_spark import cache
-from lithops_dataframe_spark.plans import QUERIES, ORACLES
+import bench
+from lithops_dataframe_spark import cache, catalog
+from lithops_dataframe_spark.plans import QUERIES, ORACLES, ordered_queries
+from tools.measure import confs_set
 
-from tests.conftest import assert_df_equal, assert_plan_scales
+from tests.conftest import assert_df_equal, assert_plan_scales, next_job_id
+
+EAGER = bench._eager_names()
 
 #: query -> why its data-sided nested-loop join is bounded anyway
 BRUTE_FORCE_JOINS = {
@@ -57,23 +70,62 @@ def _side_state(spark) -> dict[str, set]:
     }
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _warm_catalog(spark, sf_dir):
+    catalog.load_tables(spark, sf_dir)
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     before = _side_state(spark)
+    first_job = next_job_id(spark)
     result = QUERIES[name](spark, sf_dir)
+    jobs = next_job_id(spark) - first_job
     oracle = duck.sql(ORACLES[name])
     assert_df_equal(result, oracle)
     listed = name in BRUTE_FORCE_JOINS
     assert (assert_plan_scales(result) > 0) == listed, (
         "stale BRUTE_FORCE_JOINS entry" if listed else "data-sided nested-loop join"
     )
+    eager = name in EAGER
+    assert (jobs > 0) == eager, (
+        "stale tools/eager_builders.txt entry: built with 0 Spark jobs"
+        if eager
+        else f"unlisted eager builder: {jobs} Spark jobs at build time"
+    )
     cache.release_all()
     left = {kind: sorted(now - before[kind]) for kind, now in _side_state(spark).items() if now - before[kind]}
     assert not left, f"left behind after release: {left}"
 
 
+@pytest.mark.parametrize(
+    "confs",
+    [
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"},
+    ],
+    ids=["one_shuffle_partition", "no_aqe_no_broadcast"],
+)
+def test_top50_config_independent(confs, spark, duck, sf_dir):
+    failed = {}
+    with confs_set(spark, confs):
+        for name in list(ordered_queries())[:50]:
+            try:
+                assert_df_equal(QUERIES[name](spark, sf_dir), duck.sql(ORACLES[name]))
+            except AssertionError as exc:
+                failed[name] = str(exc)
+            finally:
+                cache.release_all()
+    assert not failed, "\n".join(f"{n}: {why}" for n, why in failed.items())
+
+
 def test_every_query_has_oracle():
     assert set(QUERIES) == set(ORACLES)
+
+
+def test_eager_list_names_registered():
+    unknown = EAGER - set(QUERIES)
+    assert not unknown, f"tools/eager_builders.txt names unknown queries: {sorted(unknown)}"
 
 
 def test_entry_smoke(spark):
