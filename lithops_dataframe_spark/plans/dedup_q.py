@@ -370,11 +370,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_every=2,
     )
     await_or_raise(q, 300, "stream_incremental_dedup")
-    # read back with the schema the step wrote (no inference job); one
-    # narrow row per document at gate scale — production keeps decisions
-    # in a durable table (streaming/dedup.py docstring)
-    schema = "doc_id long, n_prior_dups long, keep int, batch_no long"
-    rows = (
+    # the lazy read-back, with the schema the step wrote: no inference job
+    return (
         spark.read.schema("doc_id long, n_prior_dups long, keep int, epoch int")
         .parquet(_os.path.join(work, "decisions"))
         .select(
@@ -383,9 +380,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "keep",
             F.col("epoch").cast("long").alias("batch_no"),
         )
-        .collect()
     )
-    return values_frame(spark, rows, schema)
 
 
 @register("dedup_simhash_pairs", oracle=_SIMHASH_ORACLE)

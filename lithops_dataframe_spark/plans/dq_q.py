@@ -743,8 +743,8 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="v",
     )
     await_or_raise(q, 300, "stream_ks_drift")
-    # read back with the schema the step wrote: no inference job
-    rows = (
+    # the lazy read-back, with the schema the step wrote: no inference job
+    return (
         spark.read.schema(
             "event_type string, n_a long, n_b long, ks_num long, ks_micros long, epoch int"
         )
@@ -757,13 +757,6 @@ def stream_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ks_num",
             "ks_micros",
         )
-        .collect()
-    )
-    return values_frame(
-        spark,
-        rows,
-        "batch_no long, event_type string, n_a long, n_b long,"
-        " ks_num long, ks_micros long",
     )
 
 

@@ -6,10 +6,10 @@ full recompute over raw events (the mergeable-partials contract).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.operators import rollup as R
 from lithops_dataframe_spark.plans.registry import register
@@ -33,7 +33,6 @@ _ROLLUP_ORACLE = """
 @register("rollup_continuous_aggregate", oracle=_ROLLUP_ORACLE)
 def rollup_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"[^A-Za-z0-9.]", "_", sf_dir.strip("/"))
-    path = os.path.join("/tmp", f"lds_rollup_{tag}")
+    path = os.path.join(cache.scratch("rollup"), "rollup")
     R.materialize_rollup(events, path)
     return R.query_with_tail(spark, path, events, CUTOFF)

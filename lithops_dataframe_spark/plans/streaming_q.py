@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.catalog import load_table
-from lithops_dataframe_spark.operators.util import values_frame
 from lithops_dataframe_spark.streaming import events as SE
 from lithops_dataframe_spark.streaming.staging import await_or_raise
 from lithops_dataframe_spark.plans.registry import register
@@ -181,8 +180,7 @@ def stream_merge_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         part_col="part",
     )
     await_or_raise(q, 300, "stream_merge_upsert_sink")
-    out = spark.read.parquet(target).select("user_id", "n_events", "cents")
-    return values_frame(spark, out.collect(), out.schema)
+    return spark.read.parquet(target).select("user_id", "n_events", "cents")
 
 
 _ENRICHED_ORACLE = """
@@ -285,12 +283,13 @@ _STATEFUL_ORACLE = """
 @register("stream_stateful_running_totals", oracle=_STATEFUL_ORACLE)
 def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL structured stream through ``applyInPandasWithState``
-    (streaming/events.py user_running_totals): the events file is staged
-    twice into a replay dir (2 micro-batches via maxFilesPerTrigger=1, so
-    per-user state genuinely carries ACROSS batches), run with an
-    availableNow trigger into a memory sink, then reduced to the final
+    (streaming/events.py user_running_totals): the events table is staged
+    twice as two micro-batch files (``stage_microbatches`` on a ``__copy``
+    column, so per-user state genuinely carries ACROSS batches), run with
+    an availableNow trigger into a memory sink, then reduced to the final
     per-user totals (update mode re-emits a user per batch; the row with
-    the max n_events is the last emission — counts only grow).
+    the max n_events is the last emission — counts only grow). The frame
+    returned is the lazy read of the sink.
 
     The oracle is the batch aggregate over the doubled input — the
     incremental-stateful result must equal it exactly. This is the one
@@ -298,44 +297,38 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     just the batch twin of a streaming plan.
     """
     import os
-    import shutil
     import uuid
 
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from lithops_dataframe_spark.catalog import normalize_events_ts, table_path
+    from lithops_dataframe_spark.streaming.staging import stage_microbatches
 
-    replay = cache.scratch("stateful_replay")
+    ev = _events(spark, sf_dir)
+    work = cache.scratch("stateful_replay")
     sink = cache.temp_view(spark, "lds_stateful_" + uuid.uuid4().hex[:8])
-    src = table_path(sf_dir, "events")
-    shutil.copy(src, os.path.join(replay, "part-0000.parquet"))
-    shutil.copy(src, os.path.join(replay, "part-0001.parquet"))
-
-    # batch read only to capture the raw schema for the stream reader
-    # (events carries TIMESTAMP(NANOS) — same session-proofing as load_table)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(replay).schema
-    stream_in = normalize_events_ts(SE.read_events_stream(spark, replay, raw_schema))
-    totals = SE.user_running_totals(stream_in)
+    replay = os.path.join(work, "replay")
+    both = ev.withColumn("__copy", F.lit(0)).unionByName(ev.withColumn("__copy", F.lit(1)))
+    stage_microbatches(both, F.col("__copy"), 2, replay)
+    stream = SE.read_events_stream(spark, replay + "/*.parquet", ev.schema)
+    totals = SE.user_running_totals(stream)
 
     q = (
         totals.writeStream.format("memory")
         .queryName(sink)
         .outputMode("update")
+        .option("checkpointLocation", os.path.join(work, "_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     await_or_raise(q, 300, "stream_stateful_running_totals")
 
-    emitted = spark.table(sink)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    out = (
-        emitted.withColumn("__rn", F.row_number().over(w))
+    return (
+        spark.table(sink)
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("user_id", "n_events", "sum_value")
     )
-    return values_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -368,61 +361,53 @@ def stream_counter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER-SENSITIVE streaming state: the counter_agg twin run as a REAL
     structured stream through ``applyInPandasWithState``
     (streaming/events.py::user_counter_agg). The events table is staged
-    as a TIME-SPLIT two-file replay (first half by event time, second
-    half — split at the exact epoch-ns median so equal timestamps never
-    straddle the boundary), consumed with maxFilesPerTrigger=1 +
-    availableNow, so the per-user last-reading state genuinely carries
-    across micro-batches AND batch order matters — the property that
-    distinguishes this from the commutative running-totals operator. The
-    oracle is the plain batch LAG query over the whole table: the
-    incremental result must equal it exactly (single-event users, which
-    the batch query reports as NULL-sum rows, are filtered on both
-    sides)."""
+    as a TIME-SPLIT two-file replay (``stage_microbatches`` on
+    ``ts >= t_mid``, t_mid the approximate median ts: every event in the
+    second file is later than every event in the first, and equal
+    timestamps never straddle the boundary), consumed with
+    maxFilesPerTrigger=1 + availableNow, so the per-user last-reading
+    state genuinely carries across micro-batches AND batch order matters
+    — the property that distinguishes this from the commutative
+    running-totals operator. The frame returned is the lazy read of the
+    memory sink. The oracle is the plain batch LAG query over the whole
+    table: the incremental result must equal it exactly (single-event
+    users, which the batch query reports as NULL-sum rows, are filtered
+    on both sides)."""
     import os
     import uuid
 
-    import duckdb
-
     from pyspark.sql.window import Window
 
-    from lithops_dataframe_spark.catalog import normalize_events_ts, table_path
+    from lithops_dataframe_spark.streaming.staging import stage_microbatches
 
-    replay = cache.scratch("counter_replay")
+    ev = _events(spark, sf_dir)
+    work = cache.scratch("counter_replay")
     sink = cache.temp_view(spark, "lds_counter_" + uuid.uuid4().hex[:8])
-    src = table_path(sf_dir, "events")
-    con = duckdb.connect()
-    t_ns = con.sql(
-        f"SELECT epoch_ns(quantile_disc(ts, 0.5)) FROM read_parquet('{src}')"
-    ).fetchone()[0]
-    for i, cond in enumerate((f"epoch_ns(ts) < {t_ns}", f"epoch_ns(ts) >= {t_ns}")):
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{src}') WHERE {cond}) "
-            f"TO '{os.path.join(replay, f'part-000{i}.parquet')}' (FORMAT PARQUET)"
-        )
-    con.close()
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(replay).schema
-    stream_in = normalize_events_ts(SE.read_events_stream(spark, replay, raw_schema))
-    agg = SE.user_counter_agg(stream_in)
+    replay = os.path.join(work, "replay")
+    # any threshold keeps the split time-ordered, so an approximate
+    # median serves
+    t_mid = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
+    stage_microbatches(ev, (F.col("ts") >= F.lit(t_mid)).cast("int"), 2, replay)
+    stream = SE.read_events_stream(spark, replay + "/*.parquet", ev.schema)
+    agg = SE.user_counter_agg(stream)
 
     q = (
         agg.writeStream.format("memory")
         .queryName(sink)
         .outputMode("update")
+        .option("checkpointLocation", os.path.join(work, "_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     await_or_raise(q, 300, "stream_counter_agg")
 
-    emitted = spark.table(sink)
     w = Window.partitionBy("user_id").orderBy(F.col("n_deltas").desc())
-    out = (
-        emitted.withColumn("__rn", F.row_number().over(w))
+    return (
+        spark.table(sink)
+        .withColumn("__rn", F.row_number().over(w))
         .filter((F.col("__rn") == 1) & (F.col("n_deltas") >= 1))
         .select("user_id", "n_deltas", "n_resets", "total_delta_cents")
     )
-    return values_frame(spark, out.collect(), out.schema)
 
 
 _TOPK_HH_ORACLE = """

@@ -1007,14 +1007,8 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d in _os.listdir(state_dir)
         if (m := _re.fullmatch(r"epoch=(\d+)", d))
     )
-    rows = (
+    return (
         spark.read.schema(_state_schema(extra))
         .parquet(_os.path.join(state_dir, f"epoch={last}"))
-        .select(
-            F.col("id").alias("doc_id"), "source", "w", "res_key"
-        )
-        .collect()
-    )
-    return values_frame(
-        spark, rows, "doc_id long, source string, w long, res_key double"
+        .select(F.col("id").alias("doc_id"), "source", "w", "res_key")
     )

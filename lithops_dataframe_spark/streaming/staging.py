@@ -1,9 +1,11 @@
-"""Micro-batch replay staging shared by the streaming gate queries
+"""Micro-batch replay staging shared by the six replay gate queries
 (stream_incremental_dedup, stream_incremental_reservoir,
-stream_ks_drift, stream_merge_upsert_sink): split a batch frame into N ascending-key parquet
+stream_ks_drift, stream_merge_upsert_sink, stream_stateful_running_totals,
+stream_counter_agg): split a batch frame into N ascending-key parquet
 files whose mtimes force Structured Streaming's file source
 (maxFilesPerTrigger=1 + availableNow) to replay them as N ordered
-micro-batch epochs.
+micro-batch epochs. Each query returns the lazy read of what its stream
+wrote, readable until the next ``cache.release_all``.
 
 Extracted round 9 — three queries had line-for-line copies of this
 scaffold, so a fix to it (the r8 temp-dir leak, the r8
@@ -31,8 +33,9 @@ def stage_microbatches(
     Contract note (ADVICE r12): row order INSIDE each staged file is not
     the source order — the one-pass partitionBy write shuffles on the
     batch key, so rows land in hash-task order. Every consumer here is
-    order-insensitive (aggregates / joins / set ops per epoch); a future
-    order-sensitive replay consumer must add sortWithinPartitions on a
+    order-insensitive within an epoch (aggregates / joins / set ops), or
+    sorts each batch itself (user_counter_agg, by (ts, event_id)); any
+    other order-sensitive consumer must add sortWithinPartitions on a
     stable key before the write. An empty batch still produces a
     (zero-row) file — its epoch fires with an empty frame, which the
     step functions must handle (and their tests pin)."""

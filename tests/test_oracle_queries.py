@@ -123,6 +123,27 @@ def test_every_query_has_oracle():
     assert set(QUERIES) == set(ORACLES)
 
 
+def test_engine_never_imports_duckdb():
+    """DuckDB is the oracle engine: a builder that computed through it
+    could agree with its oracle by construction."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "lithops_dataframe_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                mods = [node.module or ""]
+            else:
+                continue
+            if any(m.split(".")[0] == "duckdb" for m in mods):
+                found.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+    assert not found, f"the engine imports duckdb: {found}"
+
+
 def test_eager_list_names_registered():
     unknown = EAGER - set(QUERIES)
     assert not unknown, f"tools/eager_builders.txt names unknown queries: {sorted(unknown)}"

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from urllib.parse import urlparse
 
 import pytest
 
@@ -126,6 +127,14 @@ REPLAY_BUILDERS = (
     "stream_merge_upsert_sink",
     "stream_stateful_running_totals",
 )
+#: the replay builders whose stream writes parquet (the other two read a
+#: memory sink)
+PARQUET_READ_BACK = (
+    "stream_incremental_dedup",
+    "stream_incremental_reservoir",
+    "stream_ks_drift",
+    "stream_merge_upsert_sink",
+)
 
 
 @pytest.mark.parametrize("name", REPLAY_BUILDERS)
@@ -145,6 +154,13 @@ def test_replay_builder_leaves_nothing_behind(spark, sf_dir, name):
     df = QUERIES[name](spark, sf_dir)
     left = {q.id for q in spark.streams.active} - streams
     assert not left, f"streams still running after return: {sorted(left)}"
+    if name in PARQUET_READ_BACK:  # the lazy read of what the stream wrote
+        tmp = os.path.realpath(tempfile.gettempdir())
+        files = df.inputFiles()
+        assert files, "the frame reads no files: the result was collected"
+        for f in files:
+            rel = os.path.relpath(os.path.realpath(urlparse(f).path), tmp)
+            assert rel.startswith("lds_"), f"{f} is not under an lds_* dir of {tmp}"
     df.collect()  # the frame reads its staging, which must still be there
     cache.release_all()
     new_work, new_views = state()
