@@ -62,168 +62,157 @@ LLM_PIPELINE = [
 
 HEADLINE = TPCH + LLM_PIPELINE
 
-# Round-3 additions: timed and reported under their own keys so the
-# headline total/value stays composition-stable across rounds (the
-# baseline ratio would otherwise inflate just by adding coverage).
-R3_ADDITIONS = [
-    "mm_codec_probe",
-    "mm_codec_pixel_stats",
-    "decontaminate_bloom_prefilter",
-    "sketch_cms_token_freq",
-    "sketch_hll_union_by_type",
-    "text_bigram_lm_quality",
-    "bpe_top_pairs",
-    "text_pii_redaction",
-    "events_retention_cohorts",
-    "events_sessionize_gap",
-    "pyds_synthetic_source",
-    "scalar_variant_props",
-    "io_zorder_roundtrip",
-    "text_bm25_search",
-    "scd2_customer_dim",
-    "sql_recursive_cte",
-    "dq_constraint_suite",
-    "emb_pq_encode",
-    "events_ewma_user_value",
-    "sim_adc_topk_pq",
-    "sim_ivfpq_topk",
-    "graph_triangle_count",
-    "stream_pyds_jsonl_sink",
-]
+# Timed additions, one key per round that added them, in timing order.
+# Each key is timed and reported under its own `<key>_additions_total`
+# so the headline total/value stays composition-stable (the baseline
+# ratio would otherwise inflate just by adding coverage). Frozen, like
+# the headline: names and order never change.
+ADDITIONS: dict[str, tuple[str, ...]] = {
+    "r3": (
+        "mm_codec_probe",
+        "mm_codec_pixel_stats",
+        "decontaminate_bloom_prefilter",
+        "sketch_cms_token_freq",
+        "sketch_hll_union_by_type",
+        "text_bigram_lm_quality",
+        "bpe_top_pairs",
+        "text_pii_redaction",
+        "events_retention_cohorts",
+        "events_sessionize_gap",
+        "pyds_synthetic_source",
+        "scalar_variant_props",
+        "io_zorder_roundtrip",
+        "text_bm25_search",
+        "scd2_customer_dim",
+        "sql_recursive_cte",
+        "dq_constraint_suite",
+        "emb_pq_encode",
+        "events_ewma_user_value",
+        "sim_adc_topk_pq",
+        "sim_ivfpq_topk",
+        "graph_triangle_count",
+        "stream_pyds_jsonl_sink",
+    ),
+    "r4": (
+        "join_asof_global_market_mark",
+        "mm_codec_jpeg_roundtrip",
+        "sketch_theta_overlap_estimate",
+        "sketch_kll_quantiles_by_type",
+        "rollup_sketch_hll_daily",
+        "pyds_pushdown_source",
+        "udf_cogroup_reconcile",
+        "dedup_cdc_chunks",
+        "bpe_train_merges",
+        "classifier_lr_train",
+        "emb_pca_power_iteration",
+        "join_interval_overlap_windows",
+        "mm_wav_spectral_features",
+    ),
+    "r5": (
+        "bpe_encode_token_stats",
+        "udf_grouped_ols_trend",
+        "graph_pagerank",
+        "io_merge_upsert_partitioned",
+        "stream_view_click_left_outer",
+    ),
+    "r6": (
+        "join_asof_nearest_mark",
+        "emb_semantic_dedup_keep",
+        "classifier_lr_score_corpus",
+        "dedup_incremental_batch",
+        "events_gapfill_interpolate",
+        "stream_enriched_segment_windows",
+        "events_lttb_downsample",
+        "sample_systematic_weighted",
+        "stream_merge_upsert_sink",
+        "dedup_jaccard_prefix_filter",
+        "events_seasonal_decompose",
+        "events_anomaly_mad",
+        "mix_interleave_epoch",
+        "select_dsir_importance",
+        "eval_classifier_auc",
+        "retrieval_hybrid_rrf",
+        "dedup_containment_pairs",
+        "dedup_duplicate_spans",
+        "events_markov_transitions",
+        "graph_label_propagation",
+        "events_time_weighted_avg",
+        "cf_part_cooccurrence_lift",
+        "text_distinctive_terms_odds",
+        "events_counter_agg",
+        "dq_key_skew_report",
+        "emb_matryoshka_recall",
+        "pack_concat_chunks",
+        "classifier_lr_kfold",
+        "stream_counter_agg",
+        "join_scd2_pointintime",
+        "emb_binary_quantize_recall",
+        "emb_hard_negative_mining",
+        "decontaminate_semantic",
+        "events_ohlc_bars",
+        "dq_profile_drift",
+        "stat_spearman_trend",
+        "dedup_chunk_keep_first",
+        "eval_calibration_bins",
+        "dq_k_anonymity_cells",
+        "events_winsorize_stats",
+        "retrieval_mmr_rerank",
+        "stream_window_topk_users",
+        "dq_snapshot_diff",
+        "stat_chi2_independence",
+        "io_dpp_prune",
+        "events_decayed_value",
+        "split_temporal_cv_manifest",
+        "sample_hash_per_group",
+        "events_ab_assignment",
+        "dedup_ensemble_agreement",
+        "pack_length_buckets",
+        "stream_view_click_full_outer",
+        "bpe_fertility_by_lang",
+        "cf_negative_sampling",
+        "events_coverage_report",
+        "eval_auc_by_source",
+        "retrieval_rbo_lex_vs_sem",
+        "io_csv_corrupt_audit",
+        "scd_late_arriving_dim",
+        "feat_quantile_normalize",
+        "text_corpus_datasheet",
+        "emb_table_audit",
+        "join_asof_tolerance_attribution",
+    ),
+    "r7": (
+        "dq_ks_value_drift",
+    ),
+    "r8": (
+        "stream_incremental_dedup",
+        "retrieval_rerank_features",
+        "mix_epoch_schedule",
+    ),
+    "r9": (
+        "sample_reservoir_weighted",
+        "pack_balanced_shards",
+        "select_token_budget_greedy",
+        "pref_bradley_terry",
+        "events_changepoint_cusum",
+        "stream_incremental_reservoir",
+        "text_ngram_novelty",
+        "stream_ks_drift",
+        "pipeline_traindata_manifest",
+    ),
+    "r10": (
+        "eval_rater_agreement",
+        "text_source_token_gini",
+    ),
+    "r11": (
+        "eval_mcnemar_exact",
+        "eval_cochran_q",
+    ),
+    "r12": (
+        "eval_fleiss_kappa",
+    ),
+}
 
-# Round-4 additions: same composition-stability rule — new queries this
-# round get timed and summed under their own key.
-R4_ADDITIONS: list[str] = [
-    "join_asof_global_market_mark",
-    "mm_codec_jpeg_roundtrip",
-    "sketch_theta_overlap_estimate",
-    "sketch_kll_quantiles_by_type",
-    "rollup_sketch_hll_daily",
-    "pyds_pushdown_source",
-    "udf_cogroup_reconcile",
-    "dedup_cdc_chunks",
-    "bpe_train_merges",
-    "classifier_lr_train",
-    "emb_pca_power_iteration",
-    "join_interval_overlap_windows",
-    "mm_wav_spectral_features",
-]
-
-# Round-5 additions: same composition-stability rule.
-R5_ADDITIONS: list[str] = [
-    "bpe_encode_token_stats",
-    "udf_grouped_ols_trend",
-    "graph_pagerank",
-    "io_merge_upsert_partitioned",
-    "stream_view_click_left_outer",
-]
-
-# Round-6 additions: same composition-stability rule.
-R6_ADDITIONS: list[str] = [
-    "join_asof_nearest_mark",
-    "emb_semantic_dedup_keep",
-    "classifier_lr_score_corpus",
-    "dedup_incremental_batch",
-    "events_gapfill_interpolate",
-    "stream_enriched_segment_windows",
-    "events_lttb_downsample",
-    "sample_systematic_weighted",
-    "stream_merge_upsert_sink",
-    # r6 continuation batch
-    "dedup_jaccard_prefix_filter",
-    "events_seasonal_decompose",
-    "events_anomaly_mad",
-    "mix_interleave_epoch",
-    "select_dsir_importance",
-    "eval_classifier_auc",
-    "retrieval_hybrid_rrf",
-    "dedup_containment_pairs",
-    # r6 continuation, second batch
-    "dedup_duplicate_spans",
-    "events_markov_transitions",
-    "graph_label_propagation",
-    "events_time_weighted_avg",
-    "cf_part_cooccurrence_lift",
-    "text_distinctive_terms_odds",
-    "events_counter_agg",
-    "dq_key_skew_report",
-    "emb_matryoshka_recall",
-    "pack_concat_chunks",
-    "classifier_lr_kfold",
-    "stream_counter_agg",
-    "join_scd2_pointintime",
-    # r6 continuation, third batch
-    "emb_binary_quantize_recall",
-    "emb_hard_negative_mining",
-    "decontaminate_semantic",
-    "events_ohlc_bars",
-    "dq_profile_drift",
-    "stat_spearman_trend",
-    "dedup_chunk_keep_first",
-    "eval_calibration_bins",
-    "dq_k_anonymity_cells",
-    "events_winsorize_stats",
-    "retrieval_mmr_rerank",
-    "stream_window_topk_users",
-    "dq_snapshot_diff",
-    "stat_chi2_independence",
-    "io_dpp_prune",
-    "events_decayed_value",
-    "split_temporal_cv_manifest",
-    "sample_hash_per_group",
-    "events_ab_assignment",
-    "dedup_ensemble_agreement",
-    "pack_length_buckets",
-    "stream_view_click_full_outer",
-    "bpe_fertility_by_lang",
-    "cf_negative_sampling",
-    "events_coverage_report",
-    "eval_auc_by_source",
-    "retrieval_rbo_lex_vs_sem",
-    "io_csv_corrupt_audit",
-    "scd_late_arriving_dim",
-    "feat_quantile_normalize",
-    "text_corpus_datasheet",
-    "emb_table_audit",
-    "join_asof_tolerance_attribution",
-]
-
-# Round-7 additions: same composition-stability rule.
-R7_ADDITIONS: list[str] = [
-    "dq_ks_value_drift",
-]
-
-R8_ADDITIONS: list[str] = [
-    "stream_incremental_dedup",
-    "retrieval_rerank_features",
-    "mix_epoch_schedule",
-]
-
-R9_ADDITIONS: list[str] = [
-    "sample_reservoir_weighted",
-    "pack_balanced_shards",
-    "select_token_budget_greedy",
-    "pref_bradley_terry",
-    "events_changepoint_cusum",
-    "stream_incremental_reservoir",
-    "text_ngram_novelty",
-    "stream_ks_drift",
-    "pipeline_traindata_manifest",
-]
-
-R10_ADDITIONS: list[str] = [
-    "eval_rater_agreement",
-    "text_source_token_gini",
-]
-
-R11_ADDITIONS: list[str] = [
-    "eval_mcnemar_exact",
-    "eval_cochran_q",
-]
-
-R12_ADDITIONS: list[str] = [
-    "eval_fleiss_kappa",
-]
+TIMED = HEADLINE + [n for names in ADDITIONS.values() for n in names]
 
 # Scale-curve subset (VERDICT_r02 task 8): representative query per family,
 # timed at the base SF and at a key-shifted 10x fixture; the exponent
@@ -410,7 +399,7 @@ SCALE_FAMILIES: dict[str, list[str]] = {
 # registered builder. Kept out of plans/registry.py on purpose — the
 # registry is the driver-gate universe, and these exist solely to give
 # the scale curve a fixture-compatible measurement of a registered
-# query's plan (rotation_audit's backlog math stays exact).
+# query's plan.
 def _graph_pagerank_bandlocal(spark, sf_dir: str):
     from lithops_dataframe_spark.plans.lm_q import pagerank_topk
     from tools.scale_fixture import STRIDE
@@ -601,12 +590,10 @@ def main() -> None:
     # are reused — only code paths are warmed.
     warm_sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     if os.path.isdir(warm_sf):
-        for wname in HEADLINE + R3_ADDITIONS + R4_ADDITIONS + R5_ADDITIONS + R6_ADDITIONS + R7_ADDITIONS + R8_ADDITIONS + R9_ADDITIONS + R10_ADDITIONS + R11_ADDITIONS + R12_ADDITIONS:
-            if wname in QUERIES:
-                QUERIES[wname](spark, warm_sf).collect()
+        for wname in TIMED:
+            QUERIES[wname](spark, warm_sf).collect()
 
-    names = [n for n in HEADLINE + R3_ADDITIONS + R4_ADDITIONS + R5_ADDITIONS + R6_ADDITIONS + R7_ADDITIONS + R8_ADDITIONS + R9_ADDITIONS + R10_ADDITIONS + R11_ADDITIONS + R12_ADDITIONS if n in QUERIES]
-    extra = [n for n in sorted(QUERIES) if n not in names and os.environ.get("LDS_BENCH_ALL")]
+    extra = [n for n in sorted(QUERIES) if n not in TIMED and os.environ.get("LDS_BENCH_ALL")]
     # Best-of-2 per query, as two INTERLEAVED full passes: steady-state
     # engine throughput is the metric, and a single timing is exposed to
     # one-off host stalls (observed: rare ~15-20s freezes on shared
@@ -617,7 +604,7 @@ def main() -> None:
     reps = 1 if os.environ.get("LDS_BENCH_ALL") else 2
     timings: dict[str, float] = {}
     for _ in range(reps):
-        for name in names + extra:
+        for name in TIMED + extra:
             start = time.perf_counter()
             QUERIES[name](spark, sf_dir).collect()
             took = time.perf_counter() - start
@@ -633,7 +620,7 @@ def main() -> None:
     # measurement (phase-local, not just session-start), then enough
     # extra timed passes that every eager row is a best-of-4.
     eager = _eager_names() | set(PYBATCH_REMEASURE)
-    for name in (n for n in names + extra if n in eager):
+    for name in (n for n in TIMED + extra if n in eager):
         QUERIES[name](spark, sf_dir).collect()  # untimed phase-local warmup
         for _ in range(max(4 - reps, 0)):
             start = time.perf_counter()
@@ -671,19 +658,9 @@ def main() -> None:
             took = time.perf_counter() - start
             timings[name] = round(min(timings[name], took), 4)
 
-    # headline value/queries keep the round-1/2 composition; round-3/4
-    # additions report under their own total keys
+    # headline value/queries keep the round-1/2 composition; each
+    # ADDITIONS key reports under its own total key
     head = {n: t for n, t in timings.items() if n in set(HEADLINE)}
-    r3 = {n: t for n, t in timings.items() if n in set(R3_ADDITIONS)}
-    r4 = {n: t for n, t in timings.items() if n in set(R4_ADDITIONS)}
-    r5 = {n: t for n, t in timings.items() if n in set(R5_ADDITIONS)}
-    r6 = {n: t for n, t in timings.items() if n in set(R6_ADDITIONS)}
-    r7 = {n: t for n, t in timings.items() if n in set(R7_ADDITIONS)}
-    r8 = {n: t for n, t in timings.items() if n in set(R8_ADDITIONS)}
-    r9 = {n: t for n, t in timings.items() if n in set(R9_ADDITIONS)}
-    r10 = {n: t for n, t in timings.items() if n in set(R10_ADDITIONS)}
-    r11 = {n: t for n, t in timings.items() if n in set(R11_ADDITIONS)}
-    r12 = {n: t for n, t in timings.items() if n in set(R12_ADDITIONS)}
     total = round(sum(head.values()), 4)
     # The driver captures only the LAST ~2000 bytes of stdout and parses
     # the final line as JSON (BENCH_r03 lesson: a line that embeds every
@@ -703,18 +680,12 @@ def main() -> None:
         "llm_pipeline_total": round(
             sum(timings.get(n, 0.0) for n in LLM_PIPELINE), 4
         ),
-        "r3_additions_total": round(sum(r3.values()), 4),
-        "r4_additions_total": round(sum(r4.values()), 4),
-        "r5_additions_total": round(sum(r5.values()), 4),
-        "r6_additions_total": round(sum(r6.values()), 4),
-        "r7_additions_total": round(sum(r7.values()), 4),
-        "r8_additions_total": round(sum(r8.values()), 4),
-        "r9_additions_total": round(sum(r9.values()), 4),
-        "r10_additions_total": round(sum(r10.values()), 4),
-        "r11_additions_total": round(sum(r11.values()), 4),
-        "r12_additions_total": round(sum(r12.values()), 4),
-        "detail": "BENCH_FULL.json",
     }
+    for key, members in ADDITIONS.items():
+        out[f"{key}_additions_total"] = round(
+            sum(t for n, t in timings.items() if n in members), 4
+        )
+    out["detail"] = "BENCH_FULL.json"
     full = dict(out)
     full["queries"] = timings
     # the curve costs extra minutes (10x fixture build + re-timings); skip

@@ -873,7 +873,6 @@ def cdc_chunks(
     id_col: str = "doc_id",
     *,
     mask: int = 63,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Content-defined chunking via a fixed-window polynomial rolling hash
     (the Rabin-Karp/FastCDC family): a chunk boundary falls AFTER position
@@ -886,130 +885,20 @@ def cdc_chunks(
     shift every later chunk and defeat dedup. Returns
     (id, chunk_idx, chunk_len, chunk_md5) — one row per chunk.
 
-    Two value-identical execution paths (same exact BIGINT hash at every
-    position, so both replay in the same DuckDB oracle):
+    Runs as ``mapInPandas``: per Arrow batch the window hash for ALL
+    positions of a document is 8 shifted elementwise multiply-adds on the
+    numpy int64 code array (Σ code·B^j, max 126·Σ31^j ≈ 3.7e12, no
+    overflow), boundaries come from one vectorized compare, chunks from
+    Python slices. Per-byte work is the one place Catalyst expressions
+    lose to vectorized Python: a higher-order-function path pays a lambda
+    eval per probe ×8 probes per position.
 
-    - ``use_arrow=True`` (default): ``mapInPandas`` — per Arrow batch the
-      window hash is 8 SHIFTED VECTOR multiply-adds over the whole
-      document's code array (numpy int64), boundaries come from one
-      vectorized compare, chunks from Python slices. Per-byte work is the
-      one place Catalyst expressions lose to vectorized Python: the HOF
-      path pays per-element lambda-eval overhead ×8 probes per position
-      (measured ~10× slower at sf1 than this path — the r5 curve's
-      heaviest entry, 22 s t_10x / exponent 0.90).
-    - ``use_arrow=False``: pure JVM expression work, O(len·W) per
-      document — no Python in the plan; kept for environments that ban
-      Python workers and as the plan-shape twin of the oracle.
-
-    Text is sanitized to printable ASCII first so Spark's ``ascii()``,
-    numpy's uint8 codes, and DuckDB's ``ord()`` agree on every code
-    point (and byte length == char length for the emitted chunks). Avg
-    chunk ≈ mask+1 chars. Sub-document dedup at 100 TB: chunk hashes
+    Text is sanitized to printable ASCII first so numpy's uint8 codes and
+    DuckDB's ``ord()`` agree on every code point (and byte length == char
+    length for the emitted chunks); NULL or empty text yields no rows.
+    Avg chunk ≈ mask+1 chars. Sub-document dedup at 100 TB: chunk hashes
     (16 B) are the only shuffle payload, never the text.
-
-    Implementation note — the two O(n²) traps the expression path dodges:
-    ``substring(s, p, 1)`` per position is an O(p) UTF-8 offset scan, so
-    char codes are materialized into an array once; and Catalyst's
-    CollapseProject inlines plain projected columns INTO higher-order
-    lambdas, recomputing that whole array per position probed (measured:
-    a 10 KB doc took minutes) — so both the codes array and the bounds
-    array are LAMBDA-BOUND via the wrap-in-array + transform let-binding,
-    and the per-chunk substrings run after a posexplode, a real operator
-    barrier.
     """
-    if use_arrow:
-        return _cdc_chunks_arrow(df, text_col, id_col, mask=mask)
-    powers = [_CDC_B**j for j in range(_CDC_W - 1, -1, -1)]
-    s = F.regexp_replace(F.col(text_col), r"[^\x20-\x7e]", "")
-    base = df.select(F.col(id_col).alias("id"), s.alias("s")).withColumn(
-        "n", F.length("s")
-    )
-
-    def whash(codes, p):
-        # Every product must stay in BIGINT: the codes array is cast long
-        # at materialization, and each power literal is forced long too —
-        # 31^6 = 887,503,681 still fits int32, so code(int)*power(int)
-        # would be 32-bit and overflow (ANSI mode raises; legacy wraps).
-        total = None
-        for j in range(_CDC_W):
-            term = F.element_at(codes, p - _CDC_W + j + 1) * F.lit(
-                powers[j]
-            ).cast("long")
-            total = term if total is None else total + term
-        return total
-
-    def bounds_of(codes):
-        # boundaries strictly inside the doc, plus n so the last chunk
-        # closes. Docs shorter than the window have no interior positions
-        # — and F.sequence(8, n) would count DOWN for n < 8, probing
-        # element_at at 0/negative indices (error / silently wrong hash)
-        n = F.size(codes)
-        pos = F.when(
-            n >= _CDC_W,
-            F.filter(
-                F.sequence(F.lit(_CDC_W), n),
-                lambda p: (whash(codes, p) % F.lit(65536) * F.lit(40503))
-                % F.lit(65536)
-                < F.lit(65536 // (mask + 1)),
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-        return F.concat(F.filter(pos, lambda p: p < n), F.array(n))
-
-    def pairs_of(bounds):
-        return F.transform(
-            F.sequence(F.lit(1), F.size(bounds)),
-            lambda i: F.struct(
-                (
-                    F.when(i == 1, F.lit(0)).otherwise(F.element_at(bounds, i - 1))
-                ).alias("start"),
-                F.element_at(bounds, i).alias("end"),
-            ),
-        )
-
-    codes_expr = F.transform(
-        F.split(F.col("s"), ""), lambda c: F.ascii(c).cast("long")
-    )
-    chunk_pairs = F.element_at(
-        F.transform(
-            F.array(codes_expr),
-            lambda codes: F.element_at(
-                F.transform(F.array(bounds_of(codes)), pairs_of), 1
-            ),
-        ),
-        1,
-    )
-    exploded = (
-        base.filter(F.col("n") > 0)
-        .select("id", "s", F.posexplode(chunk_pairs).alias("chunk_idx", "b"))
-        .select(
-            "id",
-            "chunk_idx",
-            F.substring(
-                F.col("s"), F.col("b.start") + 1, F.col("b.end") - F.col("b.start")
-            ).alias("chunk"),
-        )
-    )
-    return exploded.filter(F.length("chunk") > 0).select(
-        "id",
-        "chunk_idx",
-        F.length("chunk").alias("chunk_len"),
-        F.md5("chunk").alias("chunk_md5"),
-    )
-
-
-def _cdc_chunks_arrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    mask: int,
-) -> DataFrame:
-    """Arrow-vectorized twin of the expression path: identical hash
-    integers (Σ code·B^j in int64 — max 126·Σ31^j ≈ 3.7e12, no overflow),
-    identical 16-bit Knuth mix, identical boundary rule, so chunk output
-    is bit-for-bit the same. The window hash for ALL positions of a
-    document is 8 shifted elementwise multiply-adds on the numpy code
-    array — vector ops over the batch, not a lambda eval per probe."""
     import hashlib
     import re
 
@@ -1038,7 +927,7 @@ def _cdc_chunks_arrow(
             ids, idxs, lens, md5s = [], [], [], []
             for doc_id, text in zip(pdf["id"], pdf["s"]):
                 if text is None:
-                    continue  # expression-path twin: null text → no rows
+                    continue
                 s = non_ascii.sub("", text)
                 n = len(s)
                 if n == 0:

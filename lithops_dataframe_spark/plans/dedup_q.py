@@ -522,9 +522,9 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     between documents (the property byte-offset chunking lacks). Emits
     every chunk duplicated across the corpus with its occurrence and
     document counts — the candidate list a chunk-level dedup/dedup-aware
-    packer consumes. All boundary math is JVM expression work; only
-    16-byte chunk hashes shuffle. Full value-hash oracle: DuckDB replays
-    the identical integer arithmetic."""
+    packer consumes. Boundaries are found per Arrow batch
+    (``cdc_chunks``); only 16-byte chunk hashes shuffle. Full value-hash
+    oracle: DuckDB replays the identical integer arithmetic."""
     docs = load_table(spark, sf_dir, "documents")
     ch = D.cdc_chunks(docs, "text", "doc_id", mask=63)
     return (

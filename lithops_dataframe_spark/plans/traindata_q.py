@@ -279,9 +279,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical DuckDB oracle."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     sh = docs.select("doc_id", H.word_shingles(F.col("text"), 3).alias("sh"))
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)  # feeds eval + postings + sizes
+    sh = cache.persist_tracked(sh)  # feeds eval + postings + sizes
     is_eval = F.col("doc_id") % _DECON_MOD == 0
     ev = (
         sh.filter(is_eval)
@@ -961,9 +959,9 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the shared oracle asserts. Standing state is k rows
     total: the 100 TB firehose never accumulates."""
     import os as _os
-    import re as _re
 
     from lithops_dataframe_spark.streaming.events import read_events_stream
+    from lithops_dataframe_spark.streaming.fsutil import list_epochs
     from lithops_dataframe_spark.streaming.reservoir import (
         _state_schema,
         foreach_batch_reservoir,
@@ -1002,11 +1000,7 @@ def stream_incremental_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra=extra,
     )
     await_or_raise(q, 300, "stream_incremental_reservoir")
-    last = max(
-        int(m.group(1))
-        for d in _os.listdir(state_dir)
-        if (m := _re.fullmatch(r"epoch=(\d+)", d))
-    )
+    last = list_epochs(spark, state_dir)[-1]
     return (
         spark.read.schema(_state_schema(extra))
         .parquet(_os.path.join(state_dir, f"epoch={last}"))

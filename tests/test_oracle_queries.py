@@ -17,7 +17,8 @@ catalog warm (so a table read costs none). ``bench.py`` times exactly the
 listed builders best-of-4.
 
 Last, ``cache.release_all()`` must remove every ``lds_*`` temp dir, temp
-view, catalog table and active stream the builder left behind.
+view, catalog table, active stream and cached relation the builder left
+behind.
 
 The first 50 of ``ordered_queries()`` must also match their oracles under
 session confs that change partitioning and join strategy, in the style of
@@ -67,11 +68,15 @@ def _side_state(spark) -> dict[str, set]:
         "temp views": {t.name for t in tables if t.isTemporary},
         "tables": {t.name for t in tables if not t.isTemporary},
         "streams": {q.id for q in spark.streams.active},
+        "cached relations": set()
+        if spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        else {"CacheManager not empty"},
     }
 
 
 @pytest.fixture(scope="module", autouse=True)
 def _warm_catalog(spark, sf_dir):
+    spark.catalog.clearCache()  # so an earlier module's persist cannot mask a leak
     catalog.load_tables(spark, sf_dir)
 
 

@@ -5,6 +5,7 @@ against accidental reorders."""
 
 from __future__ import annotations
 
+import bench
 from lithops_dataframe_spark.plans import QUERIES, ordered_queries
 from lithops_dataframe_spark.plans.registry import PRIORITY
 
@@ -101,3 +102,11 @@ def test_top50_covers_every_family():
     # so the full family list is enforced again.
     missing = [fam for fam, cands in families.items() if not (cands & top)]
     assert not missing, f"top-50 no longer covers families: {missing}"
+
+
+def test_bench_timed_set_registered_and_unique():
+    """``bench.py`` times every name once and reports nothing it did not
+    time: a renamed query fails here instead of dropping out of a total."""
+    assert set(bench.TIMED) <= set(QUERIES)
+    assert len(bench.TIMED) == len(set(bench.TIMED)) == 154
+    assert bench.TIMED[:32] == bench.HEADLINE

@@ -3,10 +3,14 @@ no false negatives, bounded false positives, CMS never undercounts."""
 
 from __future__ import annotations
 
-import pytest
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from lithops_dataframe_spark.operators import sketches as SK
+from lithops_dataframe_spark.plans import QUERIES
+from lithops_dataframe_spark.plans.dedup_q import _CDC_ORACLE
+from tests.conftest import assert_df_equal
 
 _M = 1 << 16
 _K = 5
@@ -65,31 +69,24 @@ def test_cms_exact_when_width_large(spark):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_cdc_chunks_lossless_partition(spark, use_arrow):
+def test_cdc_chunks_lossless_partition(spark):
     """Chunks partition the sanitized text exactly: lengths sum to the
-    document length and indexes are contiguous from 0 — on BOTH the
-    Arrow-vectorized default and the pure-expression path."""
+    document length and indexes are contiguous from 0."""
     from lithops_dataframe_spark.operators.dedup import cdc_chunks
 
     text = " ".join(f"tok{i * 17 % 101}" for i in range(300))
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    rows = sorted(
-        cdc_chunks(df, "text", use_arrow=use_arrow).collect(),
-        key=lambda r: r["chunk_idx"],
-    )
+    rows = sorted(cdc_chunks(df, "text").collect(), key=lambda r: r["chunk_idx"])
     assert [r["chunk_idx"] for r in rows] == list(range(len(rows)))
     assert sum(r["chunk_len"] for r in rows) == len(text)
     assert len(rows) > 2  # boundaries actually fire
 
 
-def test_cdc_arrow_equals_expression_path(spark):
-    """The two execution paths are bit-for-bit interchangeable — same
-    boundaries, lengths, and md5s — across non-ASCII text (sanitized
-    away), sub-window docs (single chunk), empty and null text (no
-    rows)."""
-    from lithops_dataframe_spark.operators.dedup import cdc_chunks
-
+def test_cdc_chunks_match_oracle(spark, tmp_path):
+    """``dedup_cdc_chunks`` equals its DuckDB replay on edge documents:
+    non-ASCII text (sanitized away), a sub-window doc (single chunk),
+    empty and NULL text (no rows). Every document is written twice, so
+    every chunk is a duplicate and reaches the output."""
     docs = [
         (1, " ".join(f"w{i * 29 % 997}" for i in range(500))),
         (2, "héllo wörld — ünïcode" * 40),  # sanitization path
@@ -97,14 +94,19 @@ def test_cdc_arrow_equals_expression_path(spark):
         (4, ""),  # no rows
         (5, None),  # no rows
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = cdc_chunks(df, "text", use_arrow=True)
-    e = cdc_chunks(df, "text", use_arrow=False)
-    # same names and types (nullability flags legitimately differ:
-    # mapInPandas output is always nullable)
-    assert a.schema.simpleString() == e.schema.simpleString()
-    assert a.exceptAll(e).count() == 0 and e.exceptAll(a).count() == 0
-    assert a.filter("id in (4, 5)").count() == 0
+    rows = [(i + k, t, "en", "web", len(t or "")) for k in (0, 10) for i, t in docs]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame(
+        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+    ).to_parquet(sf / "documents.parquet")
+    duck = duckdb.connect()
+    duck.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf / 'documents.parquet'}')"
+    )
+    result = QUERIES["dedup_cdc_chunks"](spark, str(sf))
+    assert result.count() > 0
+    assert_df_equal(result, duck.sql(_CDC_ORACLE))
 
 
 def test_cdc_chunks_shift_invariance(spark):
