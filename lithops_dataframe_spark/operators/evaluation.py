@@ -12,12 +12,9 @@ outscores a random negative, ties counting half. Computed WITHOUT pairs:
 1. aggregate to one row per DISTINCT score — (n_pos, n_neg) counts; one
    hash shuffle with map-side combine;
 2. an EXCLUSIVE prefix sum of n_neg in score order gives, for each
-   score, the negatives strictly below it — computed with the
-   scale-correct TWO-PHASE pattern (range-partition on score,
-   per-partition running sums, one tiny cumulated per-partition totals
-   frame broadcast back as carry-in; the same machinery as
-   operators/sampling.py — a global ``Window.orderBy`` would be one
-   task);
+   score, the negatives strictly below it — the inclusive running sum
+   of :func:`operators.util.prefix_sums` minus the score's own n_neg (a
+   global ``Window.orderBy`` would be one task);
 3. the tie-aware numerator doubled to stay integral:
    ``auc_num2 = Σ_s n_pos(s) · (2·cum_neg_below(s) + n_neg(s))`` and
    ``AUC = auc_num2 / (2·P·N)`` — every term an exact BIGINT, so the
@@ -34,7 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from lithops_dataframe_spark.operators.util import prefix_sums
 
 
 def roc_auc(scored: DataFrame, score_col: str, label_col: str) -> DataFrame:
@@ -47,24 +45,8 @@ def roc_auc(scored: DataFrame, score_col: str, label_col: str) -> DataFrame:
         F.sum(y).alias("np"),
         F.sum(F.lit(1) - y).alias("nn"),
     )
-    part = g.repartitionByRange(F.col(score_col).asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("__pid")
-        .orderBy(score_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = part.withColumn(
-        "__cnb_loc", F.coalesce(F.sum("nn").over(wloc), F.lit(0).cast("long"))
-    )
-    totals = part.groupBy("__pid").agg(F.sum("nn").alias("__pt"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid", F.coalesce(F.sum("__pt").over(wcum), F.lit(0).cast("long")).alias("__off")
-    )
-    c = local.join(F.broadcast(offs), "__pid").withColumn(
-        "cnb", F.col("__cnb_loc") + F.col("__off")
+    c = prefix_sums(g, [score_col], {"cn": F.col("nn")}).withColumn(
+        "cnb", F.col("cn") - F.col("nn")
     )
     agg = c.agg(
         F.sum("np").cast("long").alias("n_pos"),
@@ -104,10 +86,9 @@ def rank_calibration_bins(
 
     The bin index is computed from the exact global row number as
     ``(rank-1)·B div n`` (a deterministic closed form both engines can
-    replay — no engine-specific NTILE remainder rules), and the global
-    row number itself uses the two-phase pattern: range-partition on the
-    (score, id) key, per-partition local row_number, then a broadcast
-    per-partition-count carry — never a one-task global Window.
+    replay — no engine-specific NTILE remainder rules); the row number
+    is :func:`operators.util.prefix_sums` over (score, id), never a
+    one-task global Window.
 
     Outputs are BIGINTs plus the bin's 6dp-rounded score bounds (min/max
     pick existing doubles, no re-summation) — hash-exact cross-engine.
@@ -117,21 +98,9 @@ def rank_calibration_bins(
         F.col(id_col).alias("id"),
         F.col(label_col).cast("long").alias("y"),
     )
-    part = base.repartitionByRange(F.col("z").asc(), F.col("id").asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("__pid").orderBy("z", "id")
-    local = part.withColumn("__rk_loc", F.row_number().over(wloc).cast("long"))
-    totals = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__pt"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__pt").over(wcum), F.lit(0).cast("long")).alias("__off"),
-    )
     n_total = base.count()
-    ranked = local.join(F.broadcast(offs), "__pid").withColumn(
-        "bin",
-        F.expr(f"(__rk_loc + __off - 1) * {bins} div {n_total}").cast("long") + 1,
+    ranked = prefix_sums(base, ["z", "id"], {"rk": F.lit(1)}).withColumn(
+        "bin", F.expr(f"(rk - 1) * {bins} div {n_total}").cast("long") + 1
     )
     return ranked.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -151,41 +120,17 @@ def roc_auc_by_group(
     (group, n_pos, n_neg, auc_num2) as exact BIGINTs + ``auc`` rounded 6.
 
     Same pair-free Mann–Whitney construction as :func:`roc_auc`, with the
-    exclusive prefix sum computed per group via the GROUPED two-phase
-    pattern: range-partition on (group, score), per-partition local
-    running sums within each group, then a broadcast per-(partition,
-    group) totals carry — groups never serialize into one task, and a
-    group spanning many partitions still gets an exact global prefix."""
+    running sum grouped: :func:`operators.util.prefix_sums` with
+    ``group_cols`` — groups never serialize into one task, and a group
+    spanning many partitions still gets an exact prefix."""
     y = F.col(label_col).cast("long")
     g = scored.groupBy(group_col, score_col).agg(
         F.sum(y).alias("np"),
         F.sum(F.lit(1) - y).alias("nn"),
     )
-    part = g.repartitionByRange(
-        F.col(group_col).asc(), F.col(score_col).asc()
-    ).withColumn("__pid", F.spark_partition_id())
-    wloc = (
-        Window.partitionBy("__pid", group_col)
-        .orderBy(score_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = part.withColumn(
-        "__cnb_loc", F.coalesce(F.sum("nn").over(wloc), F.lit(0).cast("long"))
-    )
-    totals = part.groupBy("__pid", group_col).agg(F.sum("nn").alias("__pt"))
-    wcum = (
-        Window.partitionBy(group_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        "__pid",
-        group_col,
-        F.coalesce(F.sum("__pt").over(wcum), F.lit(0).cast("long")).alias("__off"),
-    )
-    c = local.join(F.broadcast(offs), ["__pid", group_col]).withColumn(
-        "cnb", F.col("__cnb_loc") + F.col("__off")
-    )
+    c = prefix_sums(
+        g, [score_col], {"cn": F.col("nn")}, group_cols=[group_col]
+    ).withColumn("cnb", F.col("cn") - F.col("nn"))
     agg = c.groupBy(group_col).agg(
         F.sum("np").cast("long").alias("n_pos"),
         F.sum("nn").cast("long").alias("n_neg"),
@@ -233,13 +178,11 @@ def ks_two_sample_by_group(
     class of documented BIGINT bound as stat_spearman_trend).
 
     Scale shape: one hash aggregate to distinct (group, value) rows with
-    per-sample counts, then the GROUPED two-phase prefix-sum pattern of
-    :func:`roc_auc_by_group` (range-partition on (group, value),
-    per-partition INCLUSIVE running sums for both samples, one tiny
-    per-(partition, group) totals frame broadcast back as carry-in —
-    groups never serialize into one task), a broadcast of the per-group
-    sample sizes, and a final per-group max. No window over a raw fact
-    table, no single-task stage."""
+    per-sample counts, then both samples' running sums per group from
+    :func:`operators.util.prefix_sums`, a broadcast of the per-group
+    sample sizes (summed over that output, never re-reading ``df``), and
+    a final per-group max. No window over a raw fact table, no
+    single-task stage."""
     from lithops_dataframe_spark import cache
 
     # NULL values carry no CDF position — and the engines would ORDER
@@ -270,47 +213,11 @@ def ks_two_sample_by_group(
     in_bytes = estimated_input_bytes(df)
     if in_bytes is None or in_bytes >= _KS_PERSIST_MIN_BYTES:
         g = cache.persist_tracked(g)
-    # part feeds the local prefix window AND the per-(pid, group) totals;
-    # the tracked persist stops the range shuffle from running twice AND
-    # pins __pid: spark_partition_id() must be observed by both consumers
-    # from the SAME materialized partitioning (same contract as asof_join's
-    # global path: registry builders auto-evict, direct library callers
-    # release_all()).
-    part = cache.persist_tracked(
-        g.repartitionByRange(
-            F.col(group_col).asc(), F.col(value_col).asc()
-        ).withColumn("__pid", F.spark_partition_id())
-    )
-    wloc = (
-        Window.partitionBy("__pid", group_col)
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = part.withColumn("__ca_loc", F.sum("ca").over(wloc)).withColumn(
-        "__cb_loc", F.sum("cb").over(wloc)
-    )
-    totals = part.groupBy("__pid", group_col).agg(
-        F.sum("ca").alias("__pa"), F.sum("cb").alias("__pb")
-    )
-    wcum = (
-        Window.partitionBy(group_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        "__pid",
-        group_col,
-        F.coalesce(F.sum("__pa").over(wcum), F.lit(0).cast("long")).alias("__offa"),
-        F.coalesce(F.sum("__pb").over(wcum), F.lit(0).cast("long")).alias("__offb"),
-    )
-    c = (
-        local.join(F.broadcast(offs), ["__pid", group_col])
-        .withColumn("cuma", F.col("__ca_loc") + F.col("__offa"))
-        .withColumn("cumb", F.col("__cb_loc") + F.col("__offb"))
-    )
-    sizes = totals.groupBy(group_col).agg(
-        F.sum("__pa").cast("long").alias("n_a"),
-        F.sum("__pb").cast("long").alias("n_b"),
+    cums = {"cuma": F.col("ca"), "cumb": F.col("cb")}
+    c = prefix_sums(g, [value_col], cums, group_cols=[group_col])
+    sizes = c.groupBy(group_col).agg(
+        F.sum("ca").cast("long").alias("n_a"),
+        F.sum("cb").cast("long").alias("n_b"),
     )
     d = c.join(F.broadcast(sizes), group_col).withColumn(
         "__d",

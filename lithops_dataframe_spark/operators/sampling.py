@@ -9,12 +9,8 @@ RNG), exactly reproducible across runs and engines (pure integer
 arithmetic), and heavy documents can legitimately be picked more than
 once (``n_picks`` > 1 — the PPS contract).
 
-The inclusive prefix sum is computed with the scale-correct TWO-PHASE
-pattern (a global ``Window.orderBy`` would be one task): range-partition
-on the canonical key, per-partition running sums, then one tiny
-carry-in frame (per-partition totals, cumulated, broadcast) patches the
-offsets — the same machinery as the global as-of carry in
-operators/joins.py. Two parallel shuffles total, no single-task stage.
+The inclusive prefix sum is :func:`operators.util.prefix_sums` (a
+global ``Window.orderBy`` would be one task).
 
 Floor-division discipline: pick counts are
 ``floor((C-1)/step) - floor((C-w-1)/step)`` over the covered interval
@@ -29,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lithops_dataframe_spark.operators.util import empty_frame, values_frame
+from lithops_dataframe_spark.operators.util import empty_frame, prefix_sums, values_frame
 
 
 def systematic_weighted_sample(
@@ -53,26 +49,7 @@ def systematic_weighted_sample(
         )
     step = max(1, int(total) // k)
 
-    part = base.repartitionByRange(F.col("id").asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("__pid")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = part.withColumn("__cloc", F.sum("w").over(wloc))
-    totals = part.groupBy("__pid").agg(F.sum("w").alias("__pt"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__pt").over(wcum), F.lit(0)).alias("__off"),
-    )
-    c = (
-        local.join(F.broadcast(offs), "__pid")
-        .withColumn("c_incl", F.col("__cloc") + F.col("__off"))
-        .drop("__pid", "__cloc", "__off")
-    )
+    c = prefix_sums(base, ["id"], {"c_incl": F.col("w")})
     picks = F.expr(f"(c_incl - 1 + {step}) div {step}") - F.expr(
         f"(c_incl - w - 1 + {step}) div {step}"
     )

@@ -227,48 +227,78 @@ def finite_or_null(col):
     return F.when(~F.isnan(c) & (F.abs(c) != F.lit(float("inf"))), c)
 
 
-def global_row_number(df: DataFrame, order_cols, out_col: str = "rn") -> DataFrame:
-    """Exact global ``row_number`` over ``order_cols`` WITHOUT a
-    single-task global window — the two-phase prefix pattern shared with
-    :func:`lithops_dataframe_spark.operators.sampling.systematic_weighted_sample`:
+def prefix_sums(df: DataFrame, order_cols, sums: dict, *, group_cols=()) -> DataFrame:
+    """Exact inclusive running sums in ``order_cols`` order within each
+    ``group_cols`` group, WITHOUT a single-task window — the ordered
+    sibling of a chunk → combine → aggregate reduction.
 
-    1. ``repartitionByRange`` on the sort key (partition i holds a
-       contiguous key range ≤ partition i+1's range),
-    2. a per-partition ``row_number`` window keyed on
-       ``spark_partition_id`` (parallel across partitions),
-    3. one tiny carry frame — per-partition row counts, cumulated and
-       broadcast — patches the local ranks into global ones.
+    ``sums`` maps each output column to a numeric expression over ``df``
+    (``{"rn": F.lit(1)}`` is the row number); the result is ``df`` plus
+    one column per key, equal to ``sum(expr) OVER (PARTITION BY
+    group_cols ORDER BY order_cols ROWS UNBOUNDED PRECEDING)`` — NULL
+    while every value so far in the group is NULL. ``order_cols`` are
+    names or Columns (``F.col("t").desc()``) and must be a total order
+    within a group (include a unique tiebreak column) or the sums are
+    only rank-stable, not row-stable.
 
-    Two parallel shuffles total, no single-task stage. ``order_cols``
-    must be a deterministic total order (include a unique tiebreak
-    column) or the assignment is only rank-stable, not row-stable.
+    1. ``repartitionByRange`` on ``group_cols + order_cols`` (partition i
+       holds a contiguous key range ≤ partition i+1's), persisted through
+       :func:`cache.persist_tracked`: both branches below read ONE
+       materialization, so they see the same ``spark_partition_id``
+       layout. Two unreused range exchanges would draw two
+       RangePartitioner samples and patch local sums with the other
+       layout's carry;
+    2. per-(partition, group) running sums (parallel across partitions);
+    3. per-(partition, group) totals, summed over the group's earlier
+       partitions into a tiny carry frame that is broadcast back
+       (null-safe on the group keys).
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from lithops_dataframe_spark import cache
 
-    # persist_tracked, not bare reuse: `part` feeds BOTH the local-rank
-    # branch and the totals branch. If exchange reuse failed to collapse
-    # them, repartitionByRange would execute twice with different
-    # RangePartitioner sample draws — and two disagreeing __pid layouts
-    # would patch local ranks with the wrong carry (same rationale as
-    # ks_two_sample_by_group / roc_auc_by_group in operators/evaluation.py).
+    order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     part = cache.persist_tracked(
-        df.repartitionByRange(*order_cols).withColumn(
+        df.repartitionByRange(*map(F.col, group_cols), *order).withColumn(
             "__pid", F.spark_partition_id()
         )
     )
-    wloc = Window.partitionBy("__pid").orderBy(*order_cols)
-    local = part.withColumn("__rloc", F.row_number().over(wloc).cast("long"))
-    totals = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__pn"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__pn").over(wcum), F.lit(0)).alias("__off"),
+    keys = ["__pid", *group_cols]
+    wloc = (
+        Window.partitionBy(*keys)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        local.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.col("__rloc") + F.col("__off"))
-        .drop("__pid", "__rloc", "__off")
+    local = part.select(
+        "*", *(F.sum(e).over(wloc).alias(f"__loc_{k}") for k, e in sums.items())
+    )
+    wcar = (
+        Window.partitionBy(*group_cols)
+        .orderBy("__pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    gkeys = [f"__grp{i}" for i in range(len(group_cols))]
+    carry = (
+        part.groupBy(*keys)
+        .agg(*(F.sum(e).alias(f"__tot_{k}") for k, e in sums.items()))
+        .select(
+            F.col("__pid").alias("__cpid"),
+            *(F.col(g).alias(a) for g, a in zip(group_cols, gkeys)),
+            *(F.sum(f"__tot_{k}").over(wcar).alias(f"__car_{k}") for k in sums),
+        )
+    )
+    on = F.col("__pid") == F.col("__cpid")
+    for g, a in zip(group_cols, gkeys):
+        on = on & F.col(g).eqNullSafe(F.col(a))
+    out = local.join(F.broadcast(carry), on)
+    for k in sums:
+        loc, car = F.col(f"__loc_{k}"), F.col(f"__car_{k}")
+        out = out.withColumn(k, F.coalesce(loc + car, loc, car))
+    return out.drop(
+        "__pid",
+        "__cpid",
+        *gkeys,
+        *(f"__loc_{k}" for k in sums),
+        *(f"__car_{k}" for k in sums),
     )

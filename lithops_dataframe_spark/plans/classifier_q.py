@@ -168,8 +168,8 @@ def eval_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation half of the train→filter loop (model ranking quality, not
     just thresholded confusion counts). Scoring is the same zero-shuffle
     literal-weights scan as classifier_lr_score_corpus; the AUC itself is
-    a distinct-score aggregate plus a TWO-PHASE distributed prefix sum
-    (operators/evaluation.py — no single-task global window), with the
+    a distinct-score aggregate plus a distributed prefix sum
+    (operators/util.py::prefix_sums — no single-task global window), with the
     doubled tie-aware numerator kept as an exact BIGINT so the metric
     hash-matches DuckDB bit-for-bit."""
     from pyspark.sql import functions as F
@@ -423,9 +423,9 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (AUC says how well it ranks; this says where the mass sits).
 
     Scoring is the same zero-shuffle literal-weights scan as the other
-    apply-side queries; binning uses operators/evaluation.py's two-phase
-    exact global rank (range partition + local row_number + broadcast
-    carry — no one-task global window). All counts/rates are BIGINTs;
+    apply-side queries; binning uses the exact global rank of
+    operators/util.py::prefix_sums (no one-task global window). All
+    counts/rates are BIGINTs;
     bin score bounds are 6dp-rounded existing doubles."""
     from pyspark.sql import functions as F
 
@@ -595,8 +595,8 @@ def eval_auc_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus source — the per-slice model-quality table that catches a
     filter that ranks well overall but fails one source's documents (the
     data-mix fairness check). Scoring is the zero-shuffle literal-weights
-    scan; the per-group AUC uses operators/evaluation.py's GROUPED
-    two-phase prefix sum (no group ever serializes into one task). The
+    scan; the per-group AUC uses operators/util.py::prefix_sums grouped
+    by source (no group ever serializes into one task). The
     doubled tie-aware numerator stays an exact BIGINT per group."""
     from pyspark.sql import functions as F
 

@@ -598,10 +598,10 @@ def dq_ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     is all-BIGINT (cross-multiplied CDF difference, no division until
     the final integer micro-units) — value-hash identical cross-engine.
 
-    Scale shape: one (type, value) hash aggregate, then the grouped
-    two-phase prefix-sum pattern (operators/evaluation.py::
-    ks_two_sample_by_group — range-partition, local inclusive sums,
-    broadcast carry), a broadcast of per-group sizes, one final max agg.
+    Scale shape: one (type, value) hash aggregate, then grouped running
+    sums (operators/evaluation.py::ks_two_sample_by_group over
+    operators/util.py::prefix_sums), a broadcast of per-group sizes, one
+    final max agg.
     No raw-fact window, no single-task stage."""
     from lithops_dataframe_spark.operators.evaluation import ks_two_sample_by_group
 

@@ -105,6 +105,7 @@ def stream_pyds_counter_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     advancing — availableNow would snapshot only the first read). The
     final per-user totals must equal the oracle's batch replay of the full
     record range — proving offset advancement and deterministic replay."""
+    import os
     import uuid
 
     register_sources(spark)
@@ -122,6 +123,9 @@ def stream_pyds_counter_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         totals.writeStream.format("memory")
         .queryName(sink)
         .outputMode("complete")
+        .option(
+            "checkpointLocation", os.path.join(cache.scratch("pyds_counter"), "_ckpt")
+        )
         .start()
     )
     q.processAllAvailable()

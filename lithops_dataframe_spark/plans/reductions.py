@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.frame import LDFrame
+from lithops_dataframe_spark.operators.util import prefix_sums
 from lithops_dataframe_spark.plans.registry import register
 
 # lineitem numeric columns, in schema order (FIXTURES.md).
@@ -516,13 +517,13 @@ def feat_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction magnitude (Σ|shift|), the number that says how far the
     group's distribution sat from the pooled one.
 
-    Scale shape: the global order statistics come from the two-phase
-    exact rank (range partition + local row_number + broadcast carry —
-    no one-task window); the within-group ranks use a per-group window
-    (group count is the fixture's 5 — at real scale lift to the grouped
-    two-phase form, as pack_length_buckets does); the quantile lookup is
-    ONE equi-join on the computed global rank. All-BIGINT half-up cents;
-    ranks tie-break on the unique event_id, so the mapping replays
+    Scale shape: the global order statistics come from the exact rank
+    of :func:`operators.util.prefix_sums` (no one-task window); the
+    within-group ranks use a per-group window (group count is the
+    fixture's 5 — at real scale pass ``group_cols`` to ``prefix_sums``,
+    as pack_length_buckets does); the quantile lookup is ONE equi-join
+    on the computed global rank. All-BIGINT half-up cents; ranks
+    tie-break on the unique event_id, so the mapping replays
     bit-identically."""
     from pyspark.sql.window import Window
 
@@ -536,21 +537,8 @@ def feat_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "event_id", cents.alias("cents")
     )
 
-    # global exact ranks, two-phase
-    part = c.repartitionByRange(F.col("cents").asc(), F.col("event_id").asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("__pid").orderBy("cents", "event_id")
-    local = part.withColumn("__r_loc", F.row_number().over(wloc).cast("long"))
-    totals = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__pt"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__pt").over(wcum), F.lit(0).cast("long")).alias("__off"),
-    )
-    glob = (
-        local.join(F.broadcast(offs), "__pid")
-        .select((F.col("__r_loc") + F.col("__off")).alias("g"), F.col("cents").alias("gcents"))
+    glob = prefix_sums(c, ["cents", "event_id"], {"g": F.lit(1)}).select(
+        "g", F.col("cents").alias("gcents")
     )
     n_total = c.count()
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.functions import text as T
-from lithops_dataframe_spark.operators.util import ensure_parallelism, global_row_number
+from lithops_dataframe_spark.operators.util import ensure_parallelism, prefix_sums
 from lithops_dataframe_spark.plans.registry import register
 
 _TOKS = T.ws_tokens_sql("text")
@@ -471,12 +471,10 @@ def text_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one conditional hash aggregate over a single scan
     carries everything except the median, which uses the exact global
-    rank via the two-phase pattern (range partition + local row_number +
-    broadcast carry — no one-task window); md5 fingerprints make the
-    dup-rate a count-distinct, never a pairwise comparison. All values
+    rank of :func:`operators.util.prefix_sums` (no one-task window);
+    md5 fingerprints make the dup-rate a count-distinct, never a
+    pairwise comparison. All values
     BIGINT (ratios as integer permille/milli)."""
-    from pyspark.sql.window import Window
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
@@ -501,21 +499,10 @@ def text_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lengths only, explicitly on BOTH engines (r11: NULLS FIRST vs LAST
     # would otherwise shift the lower-median rank)
     dmed = d.filter(F.col("words").isNotNull())
-    part = dmed.repartitionByRange(F.col("words").asc(), F.col("doc_id").asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("__pid").orderBy("words", "doc_id")
-    local = part.withColumn("__r_loc", F.row_number().over(wloc).cast("long"))
-    totals = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__pt"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__pt").over(wcum), F.lit(0).cast("long")).alias("__off"),
-    )
     n_docs = dmed.count()
     med = (
-        local.join(F.broadcast(offs), "__pid")
-        .filter((F.col("__r_loc") + F.col("__off")) == (n_docs + 1) // 2)
+        prefix_sums(dmed, ["words", "doc_id"], {"r": F.lit(1)})
+        .filter(F.col("r") == (n_docs + 1) // 2)
         .select(F.col("words").alias("median_words"))
     )
 
@@ -687,16 +674,13 @@ def text_source_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens sit in a handful of mega-documents needs different treatment
     from one with the same token total spread over millions of pages).
 
-    Scale shape: per-source ranks come from ONE global two-phase
-    row_number over (source, t, doc_id) (operators/util.py:
-    global_row_number — range partition + per-partition window + a
-    broadcast carry; no single-task window, and crucially no
-    window-partition-per-source, which would serialize each source's
-    millions of documents through one task at 100 TB). The global rank
-    is converted to the per-source rank arithmetically: with off =
-    min(rn) − 1 per source, Σ i·x = Σ rn·x − off·Σx — so one hash
-    aggregate finishes the job. Σ i·x ≤ n²·max_tokens stays BIGINT-exact
-    far past any real corpus; ×1000 stays double-exact at gate SFs."""
+    Scale shape: per-source ranks i over (t, doc_id) come from
+    :func:`operators.util.prefix_sums` grouped by source (no single-task
+    window, and crucially no window-partition-per-source, which would
+    serialize each source's millions of documents through one task at
+    100 TB) — so one hash aggregate of Σ i·x finishes the job. Σ i·x ≤
+    n²·max_tokens stays BIGINT-exact far past any real corpus; ×1000
+    stays double-exact at gate SFs."""
     docs = load_table(spark, sf_dir, "documents")
     # NULL text → 0 tokens on BOTH engines (code-review r10 catch: a bare
     # size() is NULL under ANSI, and Spark ranks NULLs FIRST while
@@ -710,18 +694,12 @@ def text_source_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("t"),
     )
-    ranked = global_row_number(
-        d,
-        [F.col("source").asc(), F.col("t").asc(), F.col("doc_id").asc()],
-        out_col="rn",
-    )
+    ranked = prefix_sums(d, ["t", "doc_id"], {"i": F.lit(1)}, group_cols=["source"])
     m = ranked.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("t").cast("long").alias("tot"),
-        F.sum(F.col("rn") * F.col("t")).cast("long").alias("s_rn"),
-        F.min("rn").cast("long").alias("min_rn"),
+        F.sum(F.col("i") * F.col("t")).cast("long").alias("s"),
     )
-    s = F.col("s_rn") - (F.col("min_rn") - 1) * F.col("tot")
     return m.select(
         "source",
         F.col("n").alias("n_docs"),
@@ -729,7 +707,7 @@ def text_source_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("tot") > 0,
             F.round(
-                1000.0 * (2 * s - (F.col("n") + 1) * F.col("tot"))
+                1000.0 * (2 * F.col("s") - (F.col("n") + 1) * F.col("tot"))
                 / (F.col("n") * F.col("tot")),
                 0,
             ).cast("long"),

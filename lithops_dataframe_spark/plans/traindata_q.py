@@ -28,7 +28,11 @@ from lithops_dataframe_spark.catalog import load_table
 from lithops_dataframe_spark.functions import hashing as H
 from lithops_dataframe_spark.functions import text as T
 from lithops_dataframe_spark.operators import sampling as SA
-from lithops_dataframe_spark.operators.util import ensure_parallelism, values_frame
+from lithops_dataframe_spark.operators.util import (
+    ensure_parallelism,
+    prefix_sums,
+    values_frame,
+)
 from lithops_dataframe_spark.plans.registry import register
 
 
@@ -340,9 +344,8 @@ def sample_systematic_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive for char-budgeted training slices, with heavy documents
     legitimately picked multiple times (n_picks ≥ 2). No RNG anywhere:
     pure integer arithmetic, bit-identical across runs, layouts, and
-    engines. The inclusive prefix sum is the two-phase range-partition +
-    broadcast-carry pattern (operators/sampling.py) — no single-task
-    window at any scale."""
+    engines. The inclusive prefix sum is operators/util.py::prefix_sums
+    — no single-task window at any scale."""
     from lithops_dataframe_spark.operators.sampling import (
         systematic_weighted_sample,
     )
@@ -675,40 +678,19 @@ def pack_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact token fill (always _CHUNK_LEN except the tail), and its
     first/last doc — the manifest a sharded example-writer consumes.
 
-    Scale shape: the global token offset uses the same two-phase
-    distributed prefix sum as sample_systematic_weighted (range
-    repartition on doc_id, per-partition running sums, one broadcast
-    carry-in patch — NO global sort/window); each doc then explodes to
-    its (last_chunk − first_chunk + 1) covered chunks, so expansion is
-    linear in chunks + docs, and one hash aggregate builds the manifest.
-    All-BIGINT arithmetic; the oracle replays it bit-identically."""
-    from pyspark.sql.window import Window
-
+    Scale shape: the global token offset is
+    :func:`operators.util.prefix_sums` over doc_id (NO global
+    sort/window); each doc then explodes to its (last_chunk −
+    first_chunk + 1) covered chunks, so expansion is linear in chunks +
+    docs, and one hash aggregate builds the manifest. All-BIGINT
+    arithmetic; the oracle replays it bit-identically."""
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     d = docs.select(
         "doc_id", F.size(T.ws_tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
-    part = d.repartitionByRange(F.col("doc_id").asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = (
-        Window.partitionBy("__pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = part.withColumn("__cloc", F.sum("n_tokens").over(wloc))
-    totals = part.groupBy("__pid").agg(F.sum("n_tokens").alias("__pt"))
-    wcum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(
-        "__pid", F.coalesce(F.sum("__pt").over(wcum), F.lit(0)).alias("__off")
-    )
     spans = (
-        local.join(F.broadcast(offs), "__pid")
-        .select(
-            "doc_id",
-            (F.col("__cloc") + F.col("__off") - F.col("n_tokens")).alias("s"),
-            (F.col("__cloc") + F.col("__off")).alias("e"),
-        )
+        prefix_sums(d, ["doc_id"], {"e": F.col("n_tokens")})
+        .select("doc_id", (F.col("e") - F.col("n_tokens")).alias("s"), "e")
         .withColumn("fc", F.expr(f"s div {_CHUNK_LEN}"))
         .withColumn("lc", F.expr(f"(e - 1) div {_CHUNK_LEN}"))
     )
@@ -775,14 +757,11 @@ def pack_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is the number you tune bucket boundaries with).
 
     Scale shape: token counts and buckets are narrow per-row maps; the
-    in-bucket sequence number uses a GROUPED two-phase exact rank —
-    range-partition on (bucket, doc_id), per-partition local row_number,
-    then a broadcast per-(partition, bucket) count carry — so no bucket
-    ever becomes a one-task global window (the handful of buckets would
-    otherwise cap parallelism at the bucket count). All-BIGINT outputs;
-    batch assignment is a closed-form floor division of the exact rank."""
-    from pyspark.sql.window import Window
-
+    in-bucket sequence number is :func:`operators.util.prefix_sums`
+    grouped by bucket, so no bucket ever becomes a one-task window (the
+    handful of buckets would otherwise cap parallelism at the bucket
+    count). All-BIGINT outputs; batch assignment is a closed-form floor
+    division of the exact rank."""
     docs = load_table(spark, sf_dir, "documents")
     t = F.size(F.split("text", " ")).cast("long")
     d = docs.select("doc_id", t.alias("t"))
@@ -799,25 +778,10 @@ def pack_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = d.select("doc_id", "t", bucket.alias("bucket"))
 
-    part = b.repartitionByRange(F.col("bucket").asc(), F.col("doc_id").asc()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    wloc = Window.partitionBy("__pid", "bucket").orderBy("doc_id")
-    local = part.withColumn("__r_loc", F.row_number().over(wloc).cast("long"))
-    totals = part.groupBy("__pid", "bucket").agg(F.count(F.lit(1)).alias("__pt"))
-    wcum = (
-        Window.partitionBy("bucket")
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        "__pid",
-        "bucket",
-        F.coalesce(F.sum("__pt").over(wcum), F.lit(0).cast("long")).alias("__off"),
-    )
-    ranked = local.join(F.broadcast(offs), ["__pid", "bucket"]).withColumn(
-        "batch_id",
-        F.expr(f"(__r_loc + __off - 1) div ({_LB_BUDGET} div bucket)").cast("long"),
+    ranked = prefix_sums(
+        b, ["doc_id"], {"r": F.lit(1)}, group_cols=["bucket"]
+    ).withColumn(
+        "batch_id", F.expr(f"(r - 1) div ({_LB_BUDGET} div bucket)").cast("long")
     )
     return ranked.groupBy("bucket", "batch_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -915,20 +879,15 @@ def pack_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is directly usable as a ``partitionBy`` write key; this
     query emits the balance audit.
 
-    Scale shape: token counts are a narrow map; the global rank is the
-    two-phase range-partition + broadcast-carry row_number
-    (operators/util.py:global_row_number) — no single-task window; the
+    Scale shape: token counts are a narrow map; the global rank is
+    :func:`operators.util.prefix_sums` — no single-task window; the
     serpentine fold is a closed-form mod expression; one final tiny
     aggregate. All-BIGINT outputs, deterministic (doc_id tiebreak)."""
-    from lithops_dataframe_spark.operators.util import global_row_number
-
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("t")
     )
-    ranked = global_row_number(
-        d, [F.col("t").desc(), F.col("doc_id").asc()], out_col="rn"
-    )
+    ranked = prefix_sums(d, [F.col("t").desc(), F.col("doc_id").asc()], {"rn": F.lit(1)})
     m = (F.col("rn") - 1) % F.lit(2 * _N_SHARDS)
     shard = (
         F.when(m < _N_SHARDS, m).otherwise(F.lit(2 * _N_SHARDS - 1) - m).cast("int")

@@ -102,8 +102,8 @@ def get_spark(app_name: str = "lithops_dataframe_spark", *, shuffle_partitions: 
     spark.sparkContext.setLogLevel("WARN")
     # Silence WindowExec's "No Partition Defined … single partition"
     # warning: every partition-less window in this engine is a two-phase
-    # CARRY frame over ~#partitions rows (global_row_number's offsets,
-    # the prefix-sum totals in evaluation.py) — bounded by design — but
+    # CARRY frame over ~#partitions rows (prefix_sums' carry in
+    # operators/util.py, the as-of carry in joins.py) — bounded by design — but
     # it fired on every bench/sweep run, burying any REAL one-task-window
     # regression (r9 verdict task 5). The detector for unbounded ones is
     # tests/test_oracle_queries.py: every registered query's executed

@@ -8,7 +8,7 @@ micro-batch is tested against it with the exact two-sample KS statistic
 (cross-multiplied BIGINT form — no floats anywhere), producing one
 drift row per (group, epoch) in an epoch-keyed decisions table. This is
 the standard online drift monitor: per-epoch cost is O(reference +
-batch) with the grouped two-phase prefix-sum machinery, and the
+batch) with the grouped running sums of ``operators.util.prefix_sums``, and the
 reference never grows. At 100 TB the reference is a pinned sample
 table (documented contract) and the per-batch KS is the alerting
 signal a data-quality pipeline pages on.

@@ -3,6 +3,7 @@ connections per scale factor, and the differential comparator."""
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 
@@ -53,6 +54,23 @@ def next_job_id(spark) -> int:
     """The id the next Spark job will get: the jobs launched between two
     reads are their difference."""
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def running_sums(rows, group, order, value) -> dict:
+    """Pure-Python reference for ``operators.util.prefix_sums``: each row
+    of ``rows`` (hashable, distinct) mapped to the inclusive running sum
+    of ``value(row)`` in ``order(row)`` order within ``group(row)`` —
+    None while every value so far in the group is None."""
+
+    def add(a, b):
+        return a if b is None else b if a is None else a + b
+
+    out = {}
+    ordered = sorted(rows, key=lambda r: (repr(group(r)), order(r)))
+    for _, grp in itertools.groupby(ordered, key=group):
+        grp = list(grp)
+        out.update(zip(grp, itertools.accumulate(map(value, grp), add)))
+    return out
 
 
 def _norm_cell(v):

@@ -14,8 +14,11 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.operators.sampling import weighted_reservoir_sample
-from lithops_dataframe_spark.operators.util import global_row_number
+from lithops_dataframe_spark.operators.util import prefix_sums
+
+from tests.conftest import running_sums
 
 
 @st.composite
@@ -69,21 +72,39 @@ def test_reservoir_layout_independent_and_sequential_exact(spark, wr):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(wr=weighted_rows())
-def test_global_row_number_layout_independent(spark, wr):
+@given(wr=weighted_rows(), grouped=st.booleans())
+def test_prefix_sums_layout_independent(spark, wr, grouped):
+    """Row number and a running sum with NULLs (w % 5 == 0) over a DESC
+    key, ungrouped or in three groups (one of them NULL), must equal the
+    sequential running sums whatever the input layout."""
     rows, parts, _ = wr
-    df = spark.createDataFrame(rows, "id long, w long").repartition(parts)
-    got = {
-        r["id"]: r["rn"]
-        for r in global_row_number(
-            df, [F.col("w").desc(), F.col("id").asc()], out_col="rn"
-        ).collect()
-    }
-    want = {
-        i: rn + 1
-        for rn, (i, _) in enumerate(sorted(rows, key=lambda t: (-t[1], t[0])))
-    }
-    assert got == want
+    rows = [
+        (i, w, None if w % 5 == 0 else w, (i % 3 or None) if grouped else 0)
+        for i, w in rows
+    ]
+    df = spark.createDataFrame(rows, "id long, w long, wn long, g long").repartition(
+        parts
+    )
+    with cache.scope():
+        got = {
+            r["id"]: (r["rn"], r["cw"])
+            for r in prefix_sums(
+                df,
+                [F.col("w").desc(), F.col("id").asc()],
+                {"rn": F.lit(1), "cw": F.col("wn")},
+                group_cols=["g"] if grouped else (),
+            ).collect()
+        }
+
+    def order(r):
+        return (-r[1], r[0])
+
+    def group(r):
+        return r[3]
+
+    rn = running_sums(rows, group, order, lambda r: 1)
+    cw = running_sums(rows, group, order, lambda r: r[2])
+    assert got == {r[0]: (rn[r], cw[r]) for r in rows}
 
 
 @settings(
@@ -112,18 +133,17 @@ def test_serpentine_balance_bound(spark, wr):
 
     # and the Spark-side assignment must agree with the sequential deal
     df = spark.createDataFrame(rows, "id long, w long").repartition(parts)
-    ranked_df = global_row_number(
-        df, [F.col("w").desc(), F.col("id").asc()], out_col="rn"
-    )
     m = (F.col("rn") - 1) % F.lit(2 * S)
-    got = (
-        ranked_df.withColumn(
-            "s", F.when(m < S, m).otherwise(F.lit(2 * S - 1) - m).cast("int")
+    with cache.scope():
+        got = (
+            prefix_sums(df, [F.col("w").desc(), F.col("id").asc()], {"rn": F.lit(1)})
+            .withColumn(
+                "s", F.when(m < S, m).otherwise(F.lit(2 * S - 1) - m).cast("int")
+            )
+            .groupBy("s")
+            .agg(F.sum("w").alias("t"))
+            .collect()
         )
-        .groupBy("s")
-        .agg(F.sum("w").alias("t"))
-        .collect()
-    )
     got_tokens = {r["s"]: r["t"] for r in got}
     want_tokens = {s: t for s, t in enumerate(shard_tokens) if t or s in got_tokens}
     for s, t in got_tokens.items():

@@ -22,6 +22,11 @@ depends on, so a lost reuse or broadcast, or an added exchange, fails here:
   exchange (IVF's broadcast is the planner's size-based choice, not a
   hint).
 - The five TPC-H queries the benchmark's ``tpch-sf0.01`` workload runs.
+- ``eval_auc_by_source`` and ``pack_length_buckets`` run one range
+  exchange per ``prefix_sums`` call: its range-partitioned frame is
+  persisted, so the running-sum and carry branches both read the cache
+  (two in-memory scans, no ``documents`` re-scan, no second range
+  exchange).
 
 Every case starts from an empty cache: a frame another test left
 materialized reports exact sizes to the planner, which can change its
@@ -86,6 +91,8 @@ EXPECTED = {
     "q05_revenue_by_nation": (6, 0, 5, 7690),
     "q13_customer_order_distribution": (3, 0, 1, 1650),
     "q18_large_volume_customers": (4, 0, 3, 13650),
+    "eval_auc_by_source": (5, 0, 1, 996),
+    "pack_length_buckets": (5, 0, 1, 1000),
 }
 
 

@@ -13,8 +13,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from lithops_dataframe_spark import cache
 from lithops_dataframe_spark.operators.sampling import weighted_reservoir_sample
-from lithops_dataframe_spark.operators.util import global_row_number
+from lithops_dataframe_spark.operators.util import prefix_sums
+
+from tests.conftest import running_sums
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,20 +70,44 @@ def test_reservoir_weight_bias(spark):
     assert 1000 in ids
 
 
-def test_global_row_number_exact(spark):
-    rows = [((i * 17) % 50, i) for i in range(300)]  # heavy ties on key
-    df = spark.createDataFrame(rows, "k long, id long")
-    got = {
-        r["id"]: r["rn"]
-        for r in global_row_number(
-            df, [F.col("k").desc(), F.col("id").asc()], out_col="rn"
-        ).collect()
-    }
-    want = {
-        i: rn + 1
-        for rn, (_, i) in enumerate(sorted(rows, key=lambda t: (-t[0], t[1])))
-    }
-    assert got == want
+def test_prefix_sums_exact(spark):
+    """Heavy ties on a DESC key over more than 3 range partitions; a
+    running sum of w next to the row count, where w is NULL on the
+    leading keys (a NULL-only prefix stays NULL) and scattered after;
+    ungrouped and grouped (a NULL group included); an empty frame."""
+    keys = [(i * 17) % 50 for i in range(300)]
+    rows = [
+        (k, i, None if k >= 45 or i % 7 == 0 else i % 5, i % 4 or None)
+        for i, k in enumerate(keys)
+    ]
+    df = spark.createDataFrame(rows, "k long, id long, w long, g long")
+    for group_cols in ((), ("g",)):
+        with cache.scope():
+            out = prefix_sums(
+                df,
+                [F.col("k").desc(), F.col("id").asc()],
+                {"rn": F.lit(1), "cw": F.col("w")},
+                group_cols=group_cols,
+            )
+            got = {r["id"]: (r["rn"], r["cw"]) for r in out.collect()}
+            assert cache._LIVE[-1].select("__pid").distinct().count() > 3
+
+        def group(r, grouped=bool(group_cols)):
+            return r[3] if grouped else None
+
+        def order(r):
+            return (-r[0], r[1])
+
+        rn = running_sums(rows, group, order, lambda r: 1)
+        cw = running_sums(rows, group, order, lambda r: r[2])
+        assert got == {r[1]: (rn[r], cw[r]) for r in rows}
+        assert got[47] == (1, None)  # id 47 leads (k=49): a NULL-only prefix
+
+    with cache.scope():
+        empty = prefix_sums(
+            spark.createDataFrame([], "k long, w long"), ["k"], {"cw": F.col("w")}
+        )
+        assert empty.columns == ["k", "w", "cw"] and empty.collect() == []
 
 
 def test_balanced_shards_skew_bound(spark):
