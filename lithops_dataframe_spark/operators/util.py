@@ -252,6 +252,11 @@ def prefix_sums(df: DataFrame, order_cols, sums: dict, *, group_cols=()) -> Data
     3. per-(partition, group) totals, summed over the group's earlier
        partitions into a tiny carry frame that is broadcast back
        (null-safe on the group keys).
+
+    The persisted frame stays in Spark's cache until it is released:
+    registry builders release it when the next builder starts; any other
+    caller wraps the call and the actions on its result in
+    :func:`cache.scope` (or calls :func:`cache.release_all`).
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window

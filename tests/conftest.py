@@ -50,6 +50,17 @@ def duck(sf_dir):
     con.close()
 
 
+@pytest.fixture
+def scoped_cache():
+    """Run a test inside ``cache.scope()``: operators such as
+    ``prefix_sums`` persist a frame that a caller outside a registry
+    builder must release."""
+    from lithops_dataframe_spark import cache
+
+    with cache.scope():
+        yield
+
+
 def next_job_id(spark) -> int:
     """The id the next Spark job will get: the jobs launched between two
     reads are their difference."""

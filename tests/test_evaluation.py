@@ -13,6 +13,9 @@ from pyspark.sql import functions as F
 from lithops_dataframe_spark.operators.evaluation import roc_auc
 
 
+pytestmark = pytest.mark.usefixtures("scoped_cache")
+
+
 def _brute_auc(pairs: list[tuple[float, int]]) -> float:
     pos = [s for s, y in pairs if y == 1]
     neg = [s for s, y in pairs if y == 0]
@@ -83,9 +86,17 @@ def test_roc_auc_single_class_is_null_not_crash(spark):
     assert row["n_pos"] == 2 and row["n_neg"] == 0 and row["auc"] is None
 
     mixed = spark.createDataFrame(
-        [("a", 0.3, 1), ("a", 0.7, 1), ("b", 0.2, 0), ("b", 0.9, 1)],
+        [
+            ("a", 0.3, 1),
+            ("a", 0.7, 1),
+            ("b", 0.2, 0),
+            ("b", 0.9, 1),
+            (None, 0.8, 0),
+            (None, 0.1, 1),
+        ],
         "g string, s double, y int",
     )
     rows = {r["g"]: r for r in roc_auc_by_group(mixed, "g", "s", "y").collect()}
     assert rows["a"]["auc"] is None  # single-class group
     assert rows["b"]["auc"] == 1.0
+    assert rows[None]["auc"] == 0.0  # a NULL group is a group, as in GROUP BY

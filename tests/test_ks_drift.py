@@ -7,8 +7,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from lithops_dataframe_spark.operators.evaluation import ks_two_sample_by_group
+
+
+pytestmark = pytest.mark.usefixtures("scoped_cache")
 
 
 def _ks_numpy(va: np.ndarray, vb: np.ndarray) -> tuple[int, int, int]:

@@ -15,6 +15,9 @@ import pytest
 from lithops_dataframe_spark.operators.sampling import multi_epoch_interleave
 
 
+pytestmark = pytest.mark.usefixtures("scoped_cache")
+
+
 def _ref(rows, budget):
     """Reference: same quota/offset/closed-form semantics, computed the
     naive way (global sort per epoch)."""

@@ -4,8 +4,12 @@ invariance of the distributed prefix sum, multi-pick heavy rows."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from lithops_dataframe_spark.operators.sampling import systematic_weighted_sample
+
+
+pytestmark = pytest.mark.usefixtures("scoped_cache")
 
 
 def _mk(spark, weights):
